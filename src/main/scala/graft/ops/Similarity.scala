@@ -453,7 +453,8 @@ object Similarity {
   }
 
   // Driver-side memo of the tiny index-METADATA tables (k centroid rows,
-  // m*k codebook rows — never vectors, never results) keyed by (table
+  // m*k codebook rows, a BM25 index's recomputed corpus stats — never
+  // vectors, never results) keyed by (table
   // root, manifest version): index workflows and per-micro-batch ingest
   // re-read these constant tables several times each (probe + encode +
   // rebuild legs), and every re-read is a full Spark job. A version-keyed
@@ -469,18 +470,24 @@ object Similarity {
           size() > 32
       })
 
-  private def cachedMeta[T <: AnyRef](spark: org.apache.spark.sql.SparkSession,
+  /** [[metaCache]] key: (root, version, commit ts, kind + the sorted
+    * data-file paths). Version alone could alias a dropped-and-recreated
+    * root whose fresh v0 holds different rows; the commit timestamp
+    * separates lineages at ms resolution, and the path set (UUID-fresh
+    * per commit dir, already in the manifest in memory — no extra I/O)
+    * separates even a same-millisecond recreate or a legacy manifest
+    * with no ts line. The paths enter whole, never as a 32-bit hash that
+    * two path sets can share. */
+  private[graft] def metaKey(table: String, version: Int, commitTs: Option[Long],
+                             kind: String, paths: Seq[String]): (String, Int, Option[Long], String) =
+    (graft.tables.GeoManifest.norm(table), version, commitTs,
+      kind + "#" + paths.sorted.mkString("\n"))
+
+  private[graft] def cachedMeta[T <: AnyRef](spark: org.apache.spark.sql.SparkSession,
                                       table: String, kind: String)(load: Int => T): T = {
-    // key on (root, version, commit ts, file-path hash): version alone
-    // could alias a dropped-and-recreated root whose fresh v0 holds
-    // different rows; the commit timestamp separates lineages at ms
-    // resolution, and the data-file path set (UUID-fresh per commit dir,
-    // already in the manifest in memory — no extra I/O) separates even a
-    // same-millisecond recreate or a legacy manifest with no ts line.
     // Manifest read is one driver-side file, no job.
     val m = graft.tables.GeoManifest.read(spark, table)
-    val key = (graft.tables.GeoManifest.norm(table), m.version, m.commitTs,
-      kind + "#" + m.files.map(_.path).hashCode())
+    val key = metaKey(table, m.version, m.commitTs, kind, m.files.map(_.path))
     val hit = metaCache.get(key)
     if (hit != null) hit.asInstanceOf[T]
     else { val loaded = load(m.version); metaCache.put(key, loaded); loaded }

@@ -126,85 +126,55 @@ object TextAnalysis {
 
   /**
    * Persisted BM25 index (the text analog of [[Similarity]]'s persisted
-   * IVF index — tokenize ONCE, probe forever): stores under `indexRoot`
-   *
-   *   - `postings` (term, doc_id, tf, dl) — a geo table partitioned by
-   *     bucket(`buckets`, term): clustered writes roll files per bucket
-   *     run, and a probe's `term IN (...)` predicate prunes to just the
-   *     query terms' buckets via exact IN-value-set file pruning;
-   *   - corpus stats (n_docs, sum_dl) as the postings table's OWN
-   *     manifest properties, committed atomically with every mutation
-   *     (pre-upgrade indexes carry them as a one-row `stats` table
-   *     instead — still readable, migrated on first mutation).
-   *
-   * [[bm25Search]] then answers any bag-of-words query from the PRUNED
-   * postings alone — the pruned rows ARE the complete posting lists for
-   * the query terms, so per-term df falls out of them and no global pass
-   * ever reruns. Build once over 100 TB; each probe reads a handful of
-   * bucket files plus a one-row stats table.
+   * IVF index — tokenize ONCE, probe forever): ONE geo table,
+   * `$indexRoot/postings`, partitioned by bucket(`buckets`, term) plus
+   * per-file doc_id stats (integral ids), holding the posting rows
+   * (term, doc_id, tf, dl), one summary row ([[DocRowTerm]], doc_id, 0,
+   * dl) per indexed doc, and the corpus stats (n_docs, sum_dl) as its own
+   * manifest props, committed atomically with every mutation.
+   * [[bm25Search]] answers any bag-of-words query from the query terms'
+   * bucket files alone: the pruned rows ARE the complete posting lists,
+   * so per-term df falls out of them and no global pass ever reruns.
    */
-  /** The stored posting rows for a batch of documents (one tokenize
-    * pass) — shared by build and append so the two can never diverge. */
+  /** The stored rows of a batch, from ONE tokenize pass shared by build
+    * and every mutation: postings plus one summary row per doc that has
+    * postings. The summary rides the same explode as the reserved term
+    * (tf counts real terms only): no second pass, no distinct. */
   private def postingsOf(df: DataFrame, id: Column, text: Column): DataFrame =
     df.select(id.as("doc_id"), tokens(text).as("__toks"))
       .withColumn("dl", size(col("__toks")).cast("long"))
-      .select(col("doc_id"), col("dl"), explode(col("__toks")).as("term"))
-      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+      .select(col("doc_id"), col("dl"), explode(when(col("dl") > 0,
+        concat(col("__toks"), array(lit(DocRowTerm))))).as("term"))
+      .groupBy("term", "doc_id", "dl")
+      .agg(count(when(col("term") =!= DocRowTerm, lit(1))).as("tf"))
       .select("term", "doc_id", "tf", "dl")
 
-  /** Reserved term of the per-doc SUMMARY rows ([[docRowsFor]]): one
-    * `(DocRowTerm, doc_id, tf=0, dl)` row per indexed doc rides the
-    * postings table itself, so the remove/upsert pricing scan prunes to
-    * the sentinel term's bucket files (~n_docs rows) instead of a full
-    * postings pass (~Σdl rows) — at 100 TB the difference between a
-    * metadata-sized read and a full index pass per delete batch — while
-    * staying inside the SAME atomic commit as the postings (the
-    * two-table design's crash window never exists). The embedded SPACE
-    * makes collision impossible by construction — [[tokens]] splits on
-    * runs of spaces, so no real posting term can ever contain one;
-    * [[bm25Search]] additionally refuses it as a query term, and
-    * everything that aggregates per-doc stats goes through [[docStats]]'
-    * DISTINCT (doc_id, dl), which a doc's same-valued summary row cannot
-    * perturb. */
+  /** Reserved term of the per-doc summary rows: the remove/upsert
+    * pricing scan prunes to its bucket files (~n_docs rows, not ~Σdl).
+    * The embedded SPACE cannot collide — [[tokens]] splits on spaces —
+    * and [[bm25Search]] refuses it as a query term. */
   private[graft] val DocRowTerm = " doc"
-  /** Marker prop (create-time): the index has carried summary rows since
-    * birth, so pricing may trust the pruned scan. Pre-upgrade indexes
-    * lack it and keep the full-scan pricing path. */
-  private val DocRowsProp = "graft.bm25.doc_rows"
 
-  /** The batch's per-doc summary frame — one (doc_id, dl) row per
-    * distinct doc. Computed ONCE per mutation from the persisted
-    * postings (the same distinct [[docStats]] needs) and reused for the
-    * stats numbers, the summary rows in the write, and (upsert) the
-    * replaced-id set. */
-  private def docRowsFor(posts: DataFrame): DataFrame =
-    posts.select("doc_id", "dl").distinct()
-
-  /** Summary rows shaped as postings-schema rows. */
-  private def asDocRows(docRows: DataFrame): DataFrame =
-    docRows.select(lit(DocRowTerm).as("term"), col("doc_id"),
-      lit(0L).as("tf"), col("dl"))
-
-  /** (n_docs, sum_dl) of a postings frame — exact longs, so stats merge
+  /** (count, Σdl) of a per-doc frame — exact longs, so stats merge
     * without drift and an empty corpus is (0, 0), never null. */
-  private def docStats(postings: DataFrame): (Long, Long) =
-    docStatsOf(postings.select("doc_id", "dl").distinct())
-
-  /** [[docStats]] over an already-distinct (doc_id, dl) frame. */
-  private def docStatsOf(docRows: DataFrame): (Long, Long) = {
-    val r = docRows
-      .agg(count(lit(1)).cast("long"), coalesce(sum(col("dl")), lit(0L))).head()
+  private def countAndSum(docs: DataFrame): (Long, Long) = {
+    val r = docs.agg(count(lit(1)).cast("long"), coalesce(sum(col("dl")), lit(0L))).head()
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Corpus-stats table properties on the POSTINGS table itself: every
-    * index mutation commits its stats in the SAME manifest commit as the
-    * postings change (GeoTable append/deleteByKey propsDelta), so the
-    * two-table crash window of the original stats-row design no longer
-    * exists for atomic verbs. `postings_version` records which snapshot's
-    * CONTENT the numbers cover — out-of-band table mutations (a raw
-    * GeoTable.append that bypassed this API) still heal read-only through
-    * the changelog, exactly as before. */
+  /** (n_docs, sum_dl) of a [[postingsOf]] batch: its summary rows. */
+  private def batchStats(posts: DataFrame): (Long, Long) =
+    countAndSum(posts.where(col("term") === DocRowTerm))
+
+  /** (n_docs, sum_dl) of any postings frame, summary rows or not (a raw
+    * table append carries none) — the rare-path recompute and heal. */
+  private def docStats(postings: DataFrame): (Long, Long) =
+    countAndSum(postings.groupBy("doc_id").agg(max(col("dl")).as("dl")))
+
+  /** Corpus stats as the postings table's own props, riding the SAME
+    * commit as every mutation (no crash window); `postings_version`
+    * names the snapshot whose CONTENT they cover, so out-of-band table
+    * mutations heal read-only through [[statsAsOfCurrent]]. */
   private val NDocsProp = "graft.bm25.n_docs"
   private val SumDlProp = "graft.bm25.sum_dl"
   private val VersionProp = "graft.bm25.postings_version"
@@ -215,90 +185,67 @@ object TextAnalysis {
                      df: DataFrame, id: Column, text: Column,
                      buckets: Int = 64): Unit = {
     import graft.tables.{GeoPartition, GeoTable}
-    // ONE tokenize pass, ONE commit: the postings persist briefly
-    // (O(batch) blocks, released below — the appendToTextIndex shape) so
-    // the doc stats and the clustered write read the same computation,
-    // and the stats ride the CREATE commit itself as table props
-    // (VersionProp = 0 names the create). The old shape re-scanned the
-    // written table for stats and landed them as a SECOND commit — an
-    // extra table pass plus a crash window between the two commits that
-    // no longer exists at all.
+    // ONE tokenize pass, ONE commit: the rows persist briefly so the
+    // stats and the write read one computation; the stats ride the
+    // CREATE commit (VersionProp = 0 names it)
     val posts = postingsOf(df, id, text).persist()
-    // docRows is NOT persisted: each consumer recomputes a narrow
-    // (doc_id, dl) distinct from the persisted postings inside its own
-    // job — cheaper than the extra materialization job a second cache
-    // would cost, locally and at scale
-    val docRows = docRowsFor(posts)
     try {
-      val (n, s) = docStatsOf(docRows)
-      // graft.write.layout=hash: the postings' layout column is ALREADY a
-      // hash bucket (bucket(term)), so range-clustering it buys nothing —
-      // but repartitionByRange's range SAMPLER is an extra pass over the
-      // postings frame per write (build, every append/upsert batch, every
-      // streamed micro-batch — a cached read here, a batch recompute
-      // wherever the persist doesn't hold). The hash exchange lands the
-      // same single-bucket files with no sampling pass (see
-      // GeoPartition.LayoutModeProp); probes prune identically.
-      // The per-doc summary rows (docRows — the SAME distinct the stats
-      // read) ride the create too: DocRowsProp marks the index as
-      // summary-priced from birth.
-      GeoTable.create(spark, s"$indexRoot/postings",
-        posts.unionByName(asDocRows(docRows)),
+      val (n, s) = batchStats(posts)
+      // hash layout: the layout column is already a hash bucket, and the
+      // range layout's sampler would add a pass over the batch per write
+      // (see GeoPartition.LayoutModeProp); probes prune identically
+      GeoTable.create(spark, s"$indexRoot/postings", posts,
         geomCol = None,
-        partitions = Seq(GeoPartition.PTransform("bucket", buckets, "term")),
-        props = statsProps(n, s, 0) +
-          (GeoPartition.LayoutModeProp -> "hash") + (DocRowsProp -> "1"),
+        partitions = GeoPartition.PTransform("bucket", buckets, "term") +:
+          GeoPartition.statsFor(
+            org.apache.spark.sql.types.StructType(Seq(posts.schema("doc_id"))), Seq.empty),
+        props = statsProps(n, s, 0) + (GeoPartition.LayoutModeProp -> "hash"),
         allowStatsProps = true)
     } finally posts.unpersist(blocking = false)
   }
 
+  /** The one mutation skeleton behind append, micro-batch append, upsert
+    * and remove: persist the batch, take its stats off its summary rows,
+    * read the stats base and expected version from ONE snapshot, price
+    * the `removed` ids (evaluated after the persist), `commit` with the
+    * advanced stats, reconcile, unpersist. With `skipEmpty`, a batch of
+    * no documents commits nothing and returns false. */
+  private def mutate(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+                     batch: Option[DataFrame], removed: => Option[DataFrame] = None,
+                     skipEmpty: Boolean = false)
+                    (commit: Map[String, String] => Unit): Boolean = {
+    val root = s"$indexRoot/postings"
+    batch.foreach(_.persist())
+    try {
+      val (dn, ds) = batch.fold((0L, 0L))(batchStats)
+      if (skipEmpty && dn == 0L) return false
+      // a foreign commit after this read pushes ours past vBase+1,
+      // which reconcile detects
+      val (n0, s0, vBase) = statsAsOfCurrent(spark, indexRoot)
+      val (rn, rs) = removed.fold((0L, 0L))(priceRemoved(spark, root, vBase, _))
+      commit(statsProps(n0 - rn + dn, s0 - rs + ds, vBase + 1))
+      reconcileIfInterleaved(spark, root, vBase + 1)
+      true
+    } finally batch.foreach(_.unpersist())
+  }
+
   /**
-   * Incrementally ADD documents (batch ids must be new — the standard
-   * append-only ingest contract) to a [[buildTextIndex]] index — the
-   * streaming-corpus shape, the text analog of
-   * `Similarity.appendToIvfIndex`: one tokenize pass writes the new
-   * postings bucket-clustered (the writer rolls files at bucket
-   * boundaries, so probes keep pruning), and the advanced stats ride the
-   * SAME manifest commit as the new postings files (propsDelta) — files
-   * and stats can never disagree, there is no crash window. The batch's
-   * postings persist briefly (O(batch) memory) so its doc stats and its
-   * write see one computation. tf/df/N/sum_dl are exact integers, so
-   * stats never drift; a probe after any number of appends ranks
-   * identically to [[bm25TopK]] over the union corpus. Nothing re-reads
-   * or re-tokenizes existing postings. Index mutations (append/remove/
-   * upsert) assume ONE writer at a time — the serial-writer contract is
-   * the supported one (the heal path in [[bm25Search]] still corrects any
-   * interleaved outcome on the next probe).
+   * Incrementally ADD documents (batch ids must be new — the append-only
+   * ingest contract) to a [[buildTextIndex]] index, the text analog of
+   * `Similarity.appendToIvfIndex`: one tokenize pass writes the batch
+   * bucket-clustered, and the advanced stats ride the SAME manifest
+   * commit. tf/df/N/sum_dl are exact integers, so a probe after any
+   * number of appends ranks identically to [[bm25TopK]] over the union.
+   * Index mutations (append/remove/upsert) assume ONE writer at a time;
+   * an interleaved outcome is still repaired (see reconcileIfInterleaved).
    */
   def appendToTextIndex(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                         df: DataFrame, id: Column, text: Column): Unit = {
-    val root = s"$indexRoot/postings"
-    val posts = postingsOf(df, id, text).persist()
-    val docRows = docRowsFor(posts)
-    try {
-      val (dn, ds) = docStatsOf(docRows)
-      // ONE stats read covers both the base numbers and the expected
-      // commit version: a foreign commit landing anywhere after it makes
-      // the mutation's commit land past vBase+1, which reconcile detects
-      // (the claimed version no longer names the commit it sits on)
-      val (n0, s0, vBase) = statsAsOfCurrent(spark, indexRoot)
-      graft.tables.GeoTable.append(spark, root,
-        withDocRows(spark, root, posts, docRows), None,
-        statsProps(n0 + dn, s0 + ds, vBase + 1))
-      reconcileIfInterleaved(spark, root, vBase + 1)
-    } finally posts.unpersist()
+    val posts = postingsOf(df, id, text)
+    mutate(spark, indexRoot, Some(posts)) { props =>
+      graft.tables.GeoTable.append(spark, s"$indexRoot/postings", posts, None, props): Unit
+    }: Unit
   }
-
-  /** The batch payload for a mutation: postings plus the per-doc summary
-    * rows — but ONLY on an index that has carried summary rows since
-    * birth ([[DocRowsProp]]). A pre-upgrade index stays summary-free and
-    * keeps full-scan pricing: mixing (summaries for new docs only) would
-    * make the pruned scan silently under-price old docs. */
-  private def withDocRows(spark: org.apache.spark.sql.SparkSession, root: String,
-                          posts: DataFrame, docRows: DataFrame): DataFrame =
-    if (graft.tables.GeoManifest.read(spark, root).props.contains(DocRowsProp))
-      posts.unionByName(asDocRows(docRows))
-    else posts
 
   /**
    * Exactly-once MICRO-BATCH ingest into a text index (the streaming-
@@ -315,18 +262,10 @@ object TextAnalysis {
     val root = s"$indexRoot/postings"
     if (graft.tables.GeoTable.lastStreamBatch(spark, root, sinkId).exists(_ >= batchId))
       return false
-    val posts = postingsOf(df, id, text).persist()
-    val docRows = docRowsFor(posts)
-    try {
-      val (dn, ds) = docStatsOf(docRows)
-      if (dn == 0L) return false
-      val (n0, s0, vBase) = statsAsOfCurrent(spark, indexRoot)
-      graft.tables.GeoTable.append(spark, root,
-        withDocRows(spark, root, posts, docRows), Some(sinkId -> batchId),
-        statsProps(n0 + dn, s0 + ds, vBase + 1))
-      reconcileIfInterleaved(spark, root, vBase + 1)
-      true
-    } finally posts.unpersist()
+    val posts = postingsOf(df, id, text)
+    mutate(spark, indexRoot, Some(posts), skipEmpty = true) { props =>
+      graft.tables.GeoTable.append(spark, root, posts, Some(sinkId -> batchId), props): Unit
+    }
   }
 
   /** Streaming BM25 index ingest as a `foreachBatch` sink: each
@@ -348,18 +287,12 @@ object TextAnalysis {
       }
 
   /** Detect-and-repair for the one hole the serial-writer contract
-    * leaves: a FOREIGN commit (raw table append, maintenance, a second
-    * mutator) landing between a mutation's stats read and its commit
-    * makes the just-committed stats base stale — and no covered-version
-    * claim can make the changelog heal exact for them (the claim is
-    * either too low, replaying the mutation's own rows twice, or too
-    * high, asserting coverage of rows never counted). Detection is one
-    * manifest read: in the serial case, version `claimed` IS the
-    * mutation's own commit, so its props name `claimed` (a later fold
-    * carrying the props forward stays a pass — the fold is content-
-    * preserving and heals net-zero). On mismatch, recompute the truth
-    * from the live postings (one two-column scan — rare-path cost) and
-    * commit it; bounded retries cover a persistently racing writer. */
+    * leaves: a FOREIGN commit landing between a mutation's stats read and
+    * its commit makes the committed stats base stale, and no covered-
+    * version claim can make the changelog heal exact for it. In the
+    * serial case version `claimed` IS the mutation's commit, so its props
+    * name `claimed`; on mismatch, recompute the truth from the live
+    * postings and commit it, with bounded retries against a racing writer. */
   private[graft] def reconcileIfInterleaved(spark: org.apache.spark.sql.SparkSession,
                                             root: String, claimed: Int): Unit = {
     // claimed > current means the mutation was a no-op (nothing
@@ -386,157 +319,129 @@ object TextAnalysis {
   }
 
   /**
-   * REMOVE documents from a [[buildTextIndex]] index — the curation verb
-   * appends can't cover: dedup/decontamination verdicts arrive AFTER an
-   * index is built, and takedowns remove documents outright. O(keys),
-   * never a rebuild: the doc ids land as one equality-delete sidecar on
-   * the postings geo table (`deleteByKey` — a metadata commit, no
-   * postings rewrite), every probe's pruned scan already merges sidecars
-   * so the removed docs drop out of tf AND df immediately, and the
-   * adjusted stats ride the SAME commit as the delete (propsDelta) — no
-   * crash window. The removed docs' exact (count, Σdl) comes from one
-   * pre-commit semi-join scan, the same work the old changelog replay
-   * did after the fact. Ids absent from the index are a no-op. A
-   * delete past the live-sidecar cap folds in a follow-up commit; the
-   * fold is content-preserving, so the committed stats stay exact.
-   * Sidecar growth is bounded by the table's own fold-at-threshold
-   * maintenance.
+   * REMOVE documents from a [[buildTextIndex]] index (dedup or
+   * decontamination verdicts, takedowns). O(keys), never a rebuild: the
+   * ids land as one equality-delete sidecar on the postings table (a
+   * metadata commit), probes merge it so the docs drop out of tf AND df
+   * at once, and the stats adjusted by [[priceRemoved]] ride the SAME
+   * commit. Ids absent from the index are a no-op; a delete past the
+   * live-sidecar cap folds in a content-preserving follow-up commit.
    */
   def removeFromTextIndex(spark: org.apache.spark.sql.SparkSession,
                           indexRoot: String, ids: DataFrame): Unit = {
-    val root = s"$indexRoot/postings"
-    // pin: the stats scan and the filed delete keys must see one batch
+    // pin: the pricing scan and the filed delete keys must see one batch
     val keyDf = ids.toDF("doc_id").localCheckpoint()
-    // base numbers, removed-docs pricing, and the expected commit version
-    // all come from ONE snapshot (vBase): a foreign commit after the read
-    // pushes the delete past vBase+1 and reconcile recomputes
-    val (n0, s0, vBase) = statsAsOfCurrent(spark, indexRoot)
-    val (rn, rs) = priceRemoved(spark, root, vBase, keyDf)
-    graft.tables.GeoTable.deleteByKey(spark, root, Seq("doc_id"), keyDf,
-      statsProps(n0 - rn, s0 - rs, vBase + 1), keysPinned = true)
-    reconcileIfInterleaved(spark, root, vBase + 1)
+    mutate(spark, indexRoot, None, removed = Some(keyDf)) { props =>
+      graft.tables.GeoTable.deleteByKey(spark, s"$indexRoot/postings", Seq("doc_id"),
+        keyDf, props, keysPinned = true): Unit
+    }: Unit
   }
 
-  /** The removed/replaced docs' exact (count, Σdl). On a summary-carrying
-    * index ([[DocRowsProp]]): ONE aggregation over the keys left-joined
-    * to the snapshot-pinned PRUNED summary scan — file pruning opens only
-    * the reserved term's bucket files and the scan yields one row per
-    * live doc (~n_docs rows), not one per posting (~Σdl rows). At 100 TB
-    * that turns the per-delete-batch full-postings pass into a
-    * metadata-sized read. Sidecar merges still apply through the scan (a
-    * previously removed doc has no live summary row and is not
-    * re-priced). Keys with NO summary row are either not live (a legal
-    * no-op) or were landed by an out-of-band RAW table append that
-    * bypassed the index verbs — only then does a fallback price exactly
-    * those keys from the full snapshot, so the out-of-band heal contract
-    * keeps its exactness. Pre-upgrade indexes keep the old full-scan
-    * pricing unconditionally. */
+  /** The removed docs' exact (count, Σdl): ONE aggregation over the keys
+    * left-joined to the snapshot's pruned summary scan (sidecars merge, so
+    * an already-removed doc prices zero). Keys with no summary row are
+    * dead (never indexed, removed, or new in an upsert) or came in by a
+    * RAW table append; the same aggregation yields their doc_id range, and
+    * one scan of that range (per-file doc_id stats skip the files outside
+    * it) prices the docs among them that hold postings but no summary. */
   private def priceRemoved(spark: org.apache.spark.sql.SparkSession,
                            root: String, vBase: Int,
                            keys: DataFrame): (Long, Long) = {
     import graft.tables.GeoTable
-    if (!graft.tables.GeoManifest.read(spark, root).props.contains(DocRowsProp))
-      return docStats(GeoTable.readAt(spark, root, vBase)
-        .join(keys, Seq("doc_id"), "left_semi"))
-    val sent = GeoTable.scanAt(spark, root, vBase,
-        col("term") === lit(DocRowTerm))
-      .select("doc_id", "dl").distinct()
+    val summaries = GeoTable.scanAt(spark, root, vBase, col("term") === lit(DocRowTerm))
+      .select("doc_id", "dl")
     val kd = keys.select("doc_id").distinct()
-    val r = kd.join(sent, Seq("doc_id"), "left")
-      .agg(count(col("dl")).cast("long"),
-        coalesce(sum(col("dl")), lit(0L)),
-        count(when(col("dl").isNull, lit(1))).cast("long")).head()
-    val (rn, rs, uncovered) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    if (uncovered == 0L) (rn, rs)
-    else {
-      val uncov = kd.join(sent, Seq("doc_id"), "left_anti")
-      val (mn, ms) = docStats(GeoTable.readAt(spark, root, vBase)
-        .join(uncov, Seq("doc_id"), "left_semi"))
-      (rn + mn, rs + ms)
-    }
+    val uncov = when(col("dl").isNull, col("doc_id"))
+    val r = kd.join(summaries, Seq("doc_id"), "left")
+      .agg(count(col("dl")).cast("long"), coalesce(sum(col("dl")), lit(0L)),
+        min(uncov), max(uncov)).head()
+    val (rn, rs) = (r.getLong(0), r.getLong(1))
+    if (r.isNullAt(2)) return (rn, rs)
+    // a covered key inside the range brings its summary row along: drop it
+    val (mn, ms) = countAndSum(
+      GeoTable.scanAt(spark, root, vBase, col("doc_id").between(r.get(2), r.get(3)))
+        .join(kd, Seq("doc_id"), "left_semi")
+        .groupBy("doc_id")
+        .agg(max(col("dl")).as("dl"), max(col("term") === DocRowTerm).as("covered"))
+        .where(!col("covered")))
+    (rn + mn, rs + ms)
   }
 
-  /** UPSERT documents (the CDC-replacement verb): ids already indexed
-    * are replaced by their batch text, new ids are added — ONE atomic
-    * commit via the table's keyed upsert: the equality-delete leg (every
-    * batch doc's OLD postings) and the fresh postings share the commit,
-    * the fresh rows out-sequence the delete so a replaced doc's new text
-    * scores immediately, and the stats delta (old footprint out, new
-    * footprint in) rides the same commit. A crash leaves the whole batch
-    * applied or none of it — never a removed-but-not-yet-re-added
-    * window. Nothing re-reads or re-tokenizes existing postings beyond
-    * the one semi-join scan that prices the replaced docs' old dl.
-    * A batch doc with ZERO tokens contributes no postings and therefore
-    * no delete key — replacing a doc with empty text is a removal, spell
-    * it [[removeFromTextIndex]]. The batch must carry AT MOST ONE text
-    * per doc_id (the keyed-upsert contract without a sequence column —
-    * duplicates would all land); net a CDC burst per key first. */
+  /** UPSERT documents (the CDC-replacement verb): indexed ids get their
+    * batch text, new ids are added, in ONE keyed-upsert commit — the
+    * equality delete of the old rows, the fresh rows (which out-sequence
+    * it) and the stats delta land together, so a crash leaves all of the
+    * batch or none. A doc with ZERO tokens has no rows and so no delete
+    * key: spell that removal [[removeFromTextIndex]]. The batch must
+    * carry AT MOST ONE text per doc_id; net a CDC burst per key first. */
   def upsertTextIndex(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                       df: DataFrame, id: Column, text: Column): Unit = {
-    val root = s"$indexRoot/postings"
-    val posts = postingsOf(df, id, text).persist()
-    val docRows = docRowsFor(posts)
-    try {
-      val (dn, ds) = docStatsOf(docRows)
-      val ids = docRows.select("doc_id")
-      val (n0, s0, vBase) = statsAsOfCurrent(spark, indexRoot)
-      val (rn, rs) = priceRemoved(spark, root, vBase, ids)
-      graft.tables.GeoTable.upsertByKey(spark, root, Seq("doc_id"),
-        withDocRows(spark, root, posts, docRows),
-        streamCommit = None,
-        propsDelta = statsProps(n0 - rn + dn, s0 - rs + ds, vBase + 1))
-      reconcileIfInterleaved(spark, root, vBase + 1)
-    } finally posts.unpersist()
+    val posts = postingsOf(df, id, text)
+    mutate(spark, indexRoot, Some(posts),
+        removed = Some(posts.where(col("term") === DocRowTerm).select("doc_id"))) { props =>
+      graft.tables.GeoTable.upsertByKey(spark, s"$indexRoot/postings", Seq("doc_id"), posts,
+        streamCommit = None, propsDelta = props): Unit
+    }: Unit
   }
 
+  /** Commit ops that rewrite files without changing the table's rows
+    * (compaction, sidecar folds, position-delete rewrites): stats that
+    * cover such a commit's parent cover the commit too. */
+  private val ContentPreservingOps = Set("optimize", "fold", "rewrite_deletes")
+
   /** Stats valid for the postings table's CURRENT version: the stored
-    * numbers (manifest props when present — every atomic verb maintains
-    * them in the postings commit itself; the legacy `stats` TABLE row for
-    * pre-upgrade indexes), advanced by the changelog delta when they lag
-    * (pure read — out-of-band table mutations and legacy crash windows
-    * heal here). Delta = NET inserted docs − NET deleted docs over the
-    * window ([[graft.tables.GeoChangelog.netChanges]], the row-exact
-    * diff — NOT the file-granular `changes`, whose rewrite commits
-    * replay removed files RAW: a sidecar fold landing inside the window —
-    * which `deleteByKey` itself triggers past the live-delete cap —
-    * would double-count every folded-away doc). Content-preserving
-    * rewrites net to zero; a doc added and removed inside one window
-    * never surfaces on either side. */
+    * props, which lag only after out-of-band commits (healed here, read-
+    * only). Content-preserving commits above the covered version are
+    * skipped by walking parent links back from the current one; a
+    * content change is replayed as NET inserted − NET deleted docs
+    * ([[graft.tables.GeoChangelog.netChanges]]: the row-exact diff, so a
+    * sidecar fold inside the window cannot double-count). When that
+    * would need an expired manifest, the stats are recomputed from the
+    * live postings, once per snapshot: an expired version is never read. */
   private def statsAsOfCurrent(spark: org.apache.spark.sql.SparkSession,
                                indexRoot: String): (Long, Long, Int) = {
+    import graft.tables.{GeoManifest, GeoTable}
     val root = s"$indexRoot/postings"
-    val m = graft.tables.GeoManifest.read(spark, root)
+    val m = GeoManifest.read(spark, root)
     val cur = m.version
     val (n0, s0, v0) =
       (m.props.get(NDocsProp), m.props.get(SumDlProp), m.props.get(VersionProp)) match {
         case (Some(n), Some(s), Some(v)) => (n.toLong, s.toLong, v.toInt)
         case (None, None, None) =>
-          // pre-upgrade index: the one-row stats TABLE (kept readable
-          // forever; the first mutation through this API migrates the
-          // numbers into postings props and the table goes inert)
-          require(graft.tables.GeoManifest.currentVersion(
-              spark, s"$indexRoot/stats").isDefined,
-            s"$indexRoot is not a complete text index (no stats props and no " +
-              "stats table) — the build crashed before its stats commit; rebuild")
-          val row = graft.tables.GeoTable.read(spark, s"$indexRoot/stats").head()
-          (row.getLong(0), row.getLong(1), row.getInt(2))
+          throw new IllegalArgumentException(
+            s"$indexRoot is not a complete text index (no graft.bm25.* stats " +
+              "props) — the build crashed before its commit; rebuild")
         case partial =>
-          // every writer commits the three keys together — a partial
-          // triple means a hand-edit slipped past the reserved-prefix
-          // guard (or a pre-guard snapshot); trusting it would silently
-          // pin wrong stats with no heal
+          // writers commit the three keys together: a partial triple is
+          // a hand-edit, and trusting it would pin wrong stats for good
           throw new IllegalStateException(
             s"$root carries an incomplete graft.bm25.* stats triple " +
               s"($partial) — never written by this library's index verbs; " +
               "rebuild the index (buildTextIndex) or restore a snapshot " +
               "whose props are intact")
       }
-    // clamp to cur: callers thread the returned version as the expected
-    // commit base, and a (pathological) future claim must not let a
-    // mutation claim a version no commit will land on
+    // clamp: the returned version is the callers' expected commit base
     if (v0 >= cur) return (n0, s0, cur)
-    // the changelog range is (base, target]: v0 is the covered snapshot
-    val changes = graft.tables.GeoChangelog.netChanges(spark, root, v0, cur)
+    // once per snapshot: probes never write, so until the next mutation
+    // commits fresh props every probe of this snapshot would repeat it
+    def recomputed = Similarity.cachedMeta(spark, root, "bm25-stats") { v =>
+      val (n, s) = docStats(GeoTable.readAt(spark, root, v))
+      (n, s, v)
+    }
+    var top = cur
+    var (parent, op) = (m.parent, m.op)
+    while (top > v0 && op.exists(ContentPreservingOps)) {
+      top = parent.getOrElse(top - 1)
+      if (top > v0) {
+        if (!GeoManifest.hasVersion(spark, root, top)) return recomputed
+        val (_, p, o) = GeoManifest.headerOf(spark, root, top)
+        parent = p; op = o
+      }
+    }
+    if (top == v0) return (n0, s0, cur)
+    if (top < v0 || !GeoManifest.hasVersion(spark, root, v0)) return recomputed
+    // commits above `top` preserve content: (v0, top] is the whole change
+    val changes = graft.tables.GeoChangelog.netChanges(spark, root, v0, top)
     val (dn, ds) = docStats(changes.where(col("_change_type") === "insert"))
     val (rn, rs) = docStats(changes.where(col("_change_type") === "delete"))
     (n0 + dn - rn, s0 + ds - rs, cur)
@@ -545,9 +450,9 @@ object TextAnalysis {
   /** Probe a [[buildTextIndex]] index: identical scores to [[bm25TopK]]
     * (same +1-idf Okapi formulation), but the scan reads only the query
     * terms' bucket files. Corpus stats resolve through
-    * [[statsAsOfCurrent]] (driver-side literals) — a stats row left
-    * stale by a crashed append heals transparently, and probes never
-    * write. */
+    * [[statsAsOfCurrent]] (driver-side literals) — props left stale by
+    * an out-of-band commit or a compaction heal transparently, and
+    * probes never write. */
   def bm25Search(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                  query: Seq[String], k: Int,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {

@@ -919,30 +919,37 @@ object GeoManifest {
       bloomCols.result(), blooms.result(), opv, checks.result(), picked, props)
   }
 
-  /** (commit ts, lineage parent) of snapshot `v` from a header-only scan
-    * of its manifest — lineage/timestamp resolution loops over versions
-    * (TIMESTAMP AS OF, history, ancestry walks), so this must not resolve
-    * v5 shard files. ts falls back to the manifest file's mtime (pre-v3);
-    * parent None = pre-lineage manifest (callers assume v-1). */
-  private def headerOf(spark: SparkSession, root: String, v: Int): (Long, Option[Int]) = {
-    val f = fs(spark, root)
-    val p = new Path(root, s"_manifests/m$v.txt")
+  /** (commit ts, lineage parent, op) of snapshot `v` from a header-only
+    * scan of its manifest — lineage/timestamp resolution loops over
+    * versions (TIMESTAMP AS OF, history, ancestry walks), so this must not
+    * resolve v5 shard files. ts None = pre-v3 manifest (callers fall back
+    * to the file's mtime); parent None = pre-lineage manifest (callers
+    * assume v-1). */
+  private[graft] def headerOf(spark: SparkSession, root: String, v: Int)
+      : (Option[Long], Option[Int], Option[String]) = {
     var ts: Option[Long] = None
     var parent: Option[Int] = None
-    readText(f, p).split('\n').foreach { l =>
+    var op: Option[String] = None
+    readText(fs(spark, root), new Path(root, s"_manifests/m$v.txt")).split('\n').foreach { l =>
       if (l.startsWith("ts\t")) ts = Some(l.substring(3).trim.toLong)
       else if (l.startsWith("parent\t")) parent = Some(l.substring(7).trim.toInt)
+      else if (l.startsWith("op\t")) op = Some(l.substring(3).trim)
     }
-    (ts.getOrElse(f.getFileStatus(p).getModificationTime), parent)
+    (ts, parent, op)
   }
 
   /** Commit wall-clock of snapshot `v` (see [[headerOf]]). */
   def commitTsOf(spark: SparkSession, root: String, v: Int): Long =
-    headerOf(spark, root, v)._1
+    headerOf(spark, root, v)._1.getOrElse(fs(spark, root)
+      .getFileStatus(new Path(root, s"_manifests/m$v.txt")).getModificationTime)
 
   /** Lineage parent of snapshot `v`; None for pre-lineage manifests. */
   def parentOf(spark: SparkSession, root: String, v: Int): Option[Int] =
     headerOf(spark, root, v)._2
+
+  /** Whether snapshot `v`'s manifest is still on disk (not vacuumed). */
+  def hasVersion(spark: SparkSession, root: String, v: Int): Boolean =
+    fs(spark, root).exists(new Path(root, s"_manifests/m$v.txt"))
 
   /** Ancestor versions of `top` (inclusive), NEWEST FIRST, following the
     * in-manifest parent lineage; stops at the root commit or at the first
@@ -952,10 +959,9 @@ object GeoManifest {
     * `_manifests` dir but are no snapshot's ancestor, so changelogs,
     * TIMESTAMP AS OF and the metadata tables never see them. */
   def ancestry(spark: SparkSession, root: String, top: Int): Seq[Int] = {
-    val f = fs(spark, root)
     val out = Seq.newBuilder[Int]
     var v = top
-    while (v >= 0 && f.exists(new Path(root, s"_manifests/m$v.txt"))) {
+    while (v >= 0 && hasVersion(spark, root, v)) {
       out += v
       val p = parentOf(spark, root, v).getOrElse(v - 1)
       require(p < v, s"corrupt lineage at $root: m$v.txt claims parent $p")

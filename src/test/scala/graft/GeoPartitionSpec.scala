@@ -218,6 +218,32 @@ class GeoPartitionSpec extends SparkSpec {
     assert(err.getMessage.contains("anchors partition transform"), err.getMessage)
   }
 
+  test("hash layout at the default rollMinRows: multi-tuple files prune conservatively") {
+    import graft.tables.GeoTable
+    // hash mode lands several NON-adjacent buckets in one shuffle
+    // partition; at the default rollMinRows (no override here) toy-sized
+    // runs never roll, so a file's recorded bucket range spans buckets it
+    // does not hold. Pruning may keep such a file; it must never drop a row
+    val root = java.nio.file.Files.createTempDirectory("geo_hash_roll").toString + "/t"
+    GeoTable.create(spark, root,
+      spark.range(0, 3000).select(col("id").as("k"), concat(lit("v"), col("id")).as("v")),
+      partitions = Seq(GeoPartition.PTransform("bucket", 16, "k")),
+      props = Map(GeoPartition.LayoutModeProp -> "hash"))
+    val m = GeoManifest.read(spark, root)
+    assert(m.files.exists(_.pstats.headOption.exists { case (lo, hi) => lo < hi }),
+      s"test shape: some file must hold several buckets: ${m.files.map(_.pstats)}")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v").as[(Long, String)].collect().sorted.toSeq
+    val all = GeoTable.read(spark, root)
+    val preds = Seq(col("k") === 0L, col("k") === 2999L, col("k").isin(7L, 1234L),
+      col("k").isin((0L until 40L by 3): _*), col("k").isin(5000L, 6000L),
+      col("k") >= 2990L)
+    preds.foreach { p =>
+      assert(rows(GeoTable.scan(spark, root, p)) == rows(all.where(p)),
+        s"pruned scan dropped or invented rows under $p")
+    }
+  }
+
   test("truncate partitioning on integers: equality and ranges prune") {
     warehouse
     spark.sql("CREATE TABLE geopt.db.tri (k BIGINT, v STRING) USING geo " +

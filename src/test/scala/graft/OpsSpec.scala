@@ -7,6 +7,36 @@ import org.apache.spark.sql.functions._
 class OpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Every physical-plan node of every action `body` runs, AS PLANNED
+    * (AQE's input plan: the final plan may swap an executed stage for an
+    * empty relation and hide the scan it already ran). A listener
+    * captures the plans; a trailing sentinel action marks the point where
+    * the in-order async listener bus has delivered them all. */
+  private def plannedNodes(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def nodes(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => nodes(a.inputPlan)
+      case other => other.children.flatMap(nodes)
+    })
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(0, 7, 1, 1).collect()
+      var tries = 0
+      while (!plans.asScala.exists(_.toString.contains("Range (0, 7")) && tries < 100) {
+        Thread.sleep(50); tries += 1
+      }
+      plans.asScala.toSeq.flatMap(nodes)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   private lazy val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog near the river bank today"),
     (1L, "the quick brown fox jumps over the lazy dog near the river bank tonight"), // near-dup of 0
@@ -847,6 +877,19 @@ class OpsSpec extends SparkSpec {
     TextAnalysis.removeFromTextIndex(spark, idx,
       corpus.where(col("doc_id") % 10 === 0).select("doc_id")
         .union(Seq(901L, 902L).toDF("doc_id")))
+    // a DEAD-key-only remove (ids never indexed) opens fewer files than
+    // the full table: the uncovered ids price through a scan of their
+    // doc_id range whose per-file doc_id stats skip every posting file,
+    // never through a scan of the whole snapshot
+    val opened = plannedNodes(TextAnalysis.removeFromTextIndex(spark, idx,
+        Seq(901L, 902L).toDF("doc_id"))).collect {
+      // posting-table scans only (the delete sidecars' key scans aside)
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.dataSchema.fieldNames.contains("term") =>
+        f.relation.location.rootPaths.size
+    }.sum
+    val allNow = filesIn(GeoTable.read(spark, root))
+    assert(opened < allNow, s"dead-key pricing must prune files: $opened vs $allNow")
     val survivors = corpus.where(col("doc_id") % 5 =!= 0)
     val truth = survivors.select(
         size(TextAnalysis.tokens(col("text"))).cast("long").as("dl"))
@@ -959,18 +1002,54 @@ class OpsSpec extends SparkSpec {
     assert(e3.getMessage.contains("incomplete graft.bm25."), e3.getMessage)
   }
 
-  test("BM25 index: a legacy stats-table index probes, heals, and migrates to props") {
+  test("BM25 build, append and upsert run no (doc_id, dl) distinct") {
     import graft.ops.TextAnalysis
-    import graft.tables.{GeoManifest, GeoPartition, GeoTable}
-    import spark.implicits._
-    val corpus = (0L until 18L).map(i =>
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    // id 13 is left out of the index: a gap inside its id range
+    val corpus = (0L until 20L).filter(_ != 13L).map(i =>
+      (i, s"w${i % 4} w${(i + 1) % 5} " + (if (i % 2 == 0) "spark" else "other")))
+      .toDF("doc_id", "text")
+    val fresh = Seq((13L, "w1 spark fresh")).toDF("doc_id", "text")
+    val idx = java.nio.file.Files.createTempDirectory("bm25nodistinct").toString + "/i"
+    // the summary rows come out of the tokenize pass: no plan of these
+    // verbs groups by exactly (doc_id, dl) with no aggregate function
+    val distincts = plannedNodes {
+      TextAnalysis.buildTextIndex(spark, idx,
+        corpus.where(col("doc_id") < 10), col("doc_id"), col("text"), buckets = 4)
+      TextAnalysis.appendToTextIndex(spark, idx,
+        corpus.where(col("doc_id") >= 10), col("doc_id"), col("text"))
+      // replaced ids and one NEW id (13), which prices through the
+      // uncovered-key range scan; the files around the gap hold its range
+      TextAnalysis.upsertTextIndex(spark, idx,
+        corpus.where(col("doc_id") % 3 === 0)
+          .select(col("doc_id"), concat(col("text"), lit(" spark")).as("text"))
+          .union(fresh),
+        col("doc_id"), col("text"))
+    }.collect {
+      case h: HashAggregateExec if h.aggregateExpressions.isEmpty &&
+          h.groupingExpressions.map(_.name) == Seq("doc_id", "dl") => h
+    }
+    assert(distincts.isEmpty, s"a (doc_id, dl) distinct ran: $distincts")
+    val q = Seq("spark", "w2")
+    val modified = corpus.select(col("doc_id"),
+      when(col("doc_id") % 3 === 0, concat(col("text"), lit(" spark")))
+        .otherwise(col("text")).as("text")).union(fresh)
+    assert(TextAnalysis.bm25Search(spark, idx, q, k = 8).collect().map(_.getLong(0)).toSeq ==
+      TextAnalysis.bm25TopK(modified, col("doc_id"), col("text"), q, k = 8)
+        .collect().map(_.getLong(0)).toSeq, "ranking drifted")
+  }
+
+  test("BM25 index: a stats-less index fails with the rebuild message") {
+    import graft.ops.TextAnalysis
+    import graft.tables.{GeoPartition, GeoTable}
+    val corpus = (0L until 12L).map(i =>
       (i, s"w${i % 6} w${(i + 2) % 6} " + (if (i % 3 == 0) "spark" else "other")))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("bm25legacy").toString + "/i"
-    // hand-build the PRE-UPGRADE layout: postings geo table without stats
-    // props + the one-row stats TABLE the old builder wrote
+    val idx = java.nio.file.Files.createTempDirectory("bm25nostats").toString + "/i"
+    // a postings table whose build never committed its stats props (the
+    // only stats home there is): probes and mutations refuse it alike
     val toks = split(trim(col("text")), " +")
-    val postings = corpus.where(col("doc_id") < 12)
+    val postings = corpus
       .select(col("doc_id"), toks.as("__toks"))
       .withColumn("dl", size(col("__toks")).cast("long"))
       .select(col("doc_id"), col("dl"), explode(col("__toks")).as("term"))
@@ -978,26 +1057,75 @@ class OpsSpec extends SparkSpec {
       .select("term", "doc_id", "tf", "dl")
     GeoTable.create(spark, idx + "/postings", postings, geomCol = None,
       partitions = Seq(GeoPartition.PTransform("bucket", 4, "term")))
-    val st = postings.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).cast("long"), sum(col("dl"))).head()
-    GeoTable.create(spark, idx + "/stats",
-      Seq((st.getLong(0), st.getLong(1), 0)).toDF("n_docs", "sum_dl", "postings_version"),
-      geomCol = None)
+    def assertRebuild(e: Exception): Unit =
+      assert(e.getMessage.contains("not a complete text index") &&
+        e.getMessage.contains("rebuild"), e.getMessage)
+    assertRebuild(intercept[IllegalArgumentException](
+      TextAnalysis.bm25Search(spark, idx, Seq("spark"), k = 3).count()))
+    assertRebuild(intercept[IllegalArgumentException](
+      TextAnalysis.appendToTextIndex(spark, idx,
+        Seq((99L, "spark late")).toDF("doc_id", "text"), col("doc_id"), col("text"))))
+  }
+
+  test("BM25 index: probes stay exact after compaction and vacuum") {
+    import graft.ops.TextAnalysis
+    import graft.tables.{GeoManifest, GeoTable}
+    val corpus = (0L until 24L).map { i =>
+      val words = (0 until (3 + (i % 5)).toInt).map(j => s"w${(i + 3 * j) % 8}")
+      (i, (words :+ (if (i % 3 == 0) "spark" else "other")).mkString(" "))
+    }.toDF("doc_id", "text")
     val q = Seq("spark", "w3")
-    def probe() = TextAnalysis.bm25Search(spark, idx, q, k = 6)
-      .collect().map(_.getLong(0)).toSeq
     def adhoc(c: org.apache.spark.sql.DataFrame) =
-      TextAnalysis.bm25TopK(c, col("doc_id"), col("text"), q, k = 6)
+      TextAnalysis.bm25TopK(c, col("doc_id"), col("text"), q, k = 8)
         .collect().map(_.getLong(0)).toSeq
-    assert(probe() == adhoc(corpus.where(col("doc_id") < 12)),
-      "a pre-upgrade index must keep probing")
-    // first mutation migrates the numbers into postings props atomically
-    TextAnalysis.appendToTextIndex(spark, idx,
-      corpus.where(col("doc_id") >= 12), col("doc_id"), col("text"))
-    val m = GeoManifest.read(spark, idx + "/postings")
-    assert(m.props("graft.bm25.postings_version").toInt == m.version,
-      "the first mutation must migrate legacy stats into props")
-    assert(probe() == adhoc(corpus), "post-migration ranking drifted")
+    // one compaction: the walk reaches the covered version through the
+    // current commit's parent link alone; two: the middle compaction's
+    // manifest is expired, so the stats come from the live postings
+    for (compactions <- Seq(1, 2)) {
+      val idx = java.nio.file.Files.createTempDirectory(s"bm25vac$compactions").toString + "/i"
+      val root = idx + "/postings"
+      def probe() = TextAnalysis.bm25Search(spark, idx, q, k = 8)
+        .collect().map(_.getLong(0)).toSeq
+      TextAnalysis.buildTextIndex(spark, idx,
+        corpus.where(col("doc_id") < 12), col("doc_id"), col("text"), buckets = 4)
+      TextAnalysis.appendToTextIndex(spark, idx,
+        corpus.where(col("doc_id") >= 12), col("doc_id"), col("text"))
+      (1 to compactions).foreach(_ => GeoTable.compact(spark, root, targetFiles = 2))
+      GeoTable.vacuum(spark, root, keepVersions = 1)
+      def postingScans(body: => Unit) = plannedNodes(body).count {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.dataSchema.fieldNames.contains("term")
+        case _ => false
+      }
+      var first = Seq.empty[Long]
+      val firstScans = postingScans { first = probe() }
+      assert(first == adhoc(corpus),
+        s"post-vacuum probe drifted after $compactions compaction(s)")
+      // a recompute is paid once per snapshot, not by every probe
+      val againScans = postingScans(assert(probe() == first, "repeat probe drifted"))
+      if (compactions == 2)
+        assert(againScans < firstScans, s"recompute repeated: $againScans vs $firstScans")
+      // the next mutation re-bases on those stats and commits exact ones
+      TextAnalysis.removeFromTextIndex(spark, idx,
+        corpus.where(col("doc_id") === 3).select("doc_id"))
+      val rest = corpus.where(col("doc_id") =!= 3)
+      assert(probe() == adhoc(rest), s"post-remove probe drifted ($compactions)")
+      val truth = rest.select(size(TextAnalysis.tokens(col("text"))).cast("long").as("dl"))
+        .agg(count(lit(1)), sum(col("dl"))).head()
+      val m = GeoManifest.read(spark, root)
+      assert(m.props("graft.bm25.n_docs").toLong == truth.getLong(0) &&
+        m.props("graft.bm25.sum_dl").toLong == truth.getLong(1) &&
+        m.props("graft.bm25.postings_version").toInt == m.version,
+        s"stats after compaction+vacuum drifted ($compactions): ${m.props}")
+    }
+  }
+
+  test("index metadata cache keys on the whole path set, not its hash") {
+    import graft.ops.Similarity
+    assert(Seq("Aa").hashCode == Seq("BB").hashCode, "test premise: colliding hashes")
+    def key(paths: Seq[String]) = Similarity.metaKey("/idx/centroids", 3, Some(7L), "centroids", paths)
+    assert(key(Seq("Aa")) != key(Seq("BB")), "colliding path lists must get distinct keys")
+    assert(key(Seq("a", "b")) == key(Seq("b", "a")), "the key must not depend on listing order")
   }
 
   test("BM25 index: an out-of-band postings append self-heals on probe") {
