@@ -3428,8 +3428,8 @@ object SparkEntry {
     // aggregate: a keyed equality DELETE leaves the data files intact (v2
     // is sidecar-only), then a CALL compaction to ONE file retires every
     // v1 file — so live -> summed rows follows from the verbs and the
-    // source counts alone (added_at_version is a v6-manifest surface and
-    // reads 0 once compaction folds the deletes away, so it is excluded).
+    // source counts alone (added_at_version, the commit that added each
+    // file — 1 or 3 here — is not part of the checked output).
     // The single-live-file layout is require'd in-query
     // (target_file_count => 1 forces it).
     "geo_allfiles_meta" -> ((s, d) => {

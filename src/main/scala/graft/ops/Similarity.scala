@@ -464,9 +464,9 @@ object Similarity {
   // probe already holds transiently).
   private val metaCache =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Int, Option[Long], String), AnyRef](16, 0.75f, true) {
+      new java.util.LinkedHashMap[(String, Int, Long, String), AnyRef](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Int, Option[Long], String), AnyRef]): Boolean =
+            e: java.util.Map.Entry[(String, Int, Long, String), AnyRef]): Boolean =
           size() > 32
       })
 
@@ -475,11 +475,10 @@ object Similarity {
     * root whose fresh v0 holds different rows; the commit timestamp
     * separates lineages at ms resolution, and the path set (UUID-fresh
     * per commit dir, already in the manifest in memory — no extra I/O)
-    * separates even a same-millisecond recreate or a legacy manifest
-    * with no ts line. The paths enter whole, never as a 32-bit hash that
-    * two path sets can share. */
-  private[graft] def metaKey(table: String, version: Int, commitTs: Option[Long],
-                             kind: String, paths: Seq[String]): (String, Int, Option[Long], String) =
+    * separates even a same-millisecond recreate. The paths enter whole,
+    * never as a 32-bit hash that two path sets can share. */
+  private[graft] def metaKey(table: String, version: Int, commitTs: Long,
+                             kind: String, paths: Seq[String]): (String, Int, Long, String) =
     (graft.tables.GeoManifest.norm(table), version, commitTs,
       kind + "#" + paths.sorted.mkString("\n"))
 

@@ -431,7 +431,7 @@ object TextAnalysis {
     var top = cur
     var (parent, op) = (m.parent, m.op)
     while (top > v0 && op.exists(ContentPreservingOps)) {
-      top = parent.getOrElse(top - 1)
+      top = parent
       if (top > v0) {
         if (!GeoManifest.hasVersion(spark, root, top)) return recomputed
         val (_, p, o) = GeoManifest.headerOf(spark, root, top)

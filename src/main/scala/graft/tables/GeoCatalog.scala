@@ -256,11 +256,11 @@ class GeoCatalog extends TableCatalog with SupportsNamespaces with FunctionCatal
 
   /** `SELECT ... FROM t TIMESTAMP AS OF ts` — resolves to the newest
     * committed manifest whose COMMIT timestamp (the manifest's own `ts`
-    * line; file mtime for pre-v3 manifests) is <= ts (the DSv2 contract
-    * passes microseconds since epoch). Using the in-manifest timestamp
-    * means filesystem copies/restores and clock-skewed writers that
-    * reorder mtimes cannot reorder history — same reasoning as Iceberg
-    * keeping commit timestamps in table metadata. */
+    * line) is <= ts (the DSv2 contract passes microseconds since epoch).
+    * Using the in-manifest timestamp means filesystem copies/restores
+    * and clock-skewed writers that reorder mtimes cannot reorder history
+    * — same reasoning as Iceberg keeping commit timestamps in table
+    * metadata. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val root = tableRoot(ident)
     GeoManifest.currentVersion(spark, root).getOrElse(throw new NoSuchTableException(ident))
@@ -699,11 +699,10 @@ class GeoMetaTable(tableName: String, sparkAtLoad: SparkSession, root: String,
     val tableSchema = schema()
     val data: Array[InternalRow] = kind match {
       // committed_at / made_current_at come from the manifest's own `ts`
-      // line (commitTsOf; mtime only as the pre-v3 fallback) — stable
-      // under filesystem copies that rewrite mtimes. Listed versions are
-      // `_current`'s ANCESTRY plus ref'd (tag/branch) snapshots — never a
-      // consecutive-number scan, which would surface staged branch
-      // manifests and torn orphans as committed history.
+      // line — stable under filesystem copies that rewrite mtimes. Listed
+      // versions are `_current`'s ANCESTRY plus ref'd (tag/branch)
+      // snapshots — never a consecutive-number scan, which would surface
+      // staged branch manifests and torn orphans as committed history.
       case "snapshots" =>
         val f = GeoManifest.fs(sparkAtLoad, root)
         // memoized: each version's manifest doubles as its child's parent
@@ -714,15 +713,12 @@ class GeoMetaTable(tableName: String, sparkAtLoad: SparkSession, root: String,
           else Some(cache.getOrElseUpdate(v, GeoManifest.readVersion(sparkAtLoad, root, v)))
         GeoMetaTable.visibleVersions(sparkAtLoad, root, current).flatMap { v =>
           mf(v).map { m =>
-            val ts = m.commitTs.getOrElse(
-              f.getFileStatus(new Path(root, s"_manifests/m$v.txt")).getModificationTime)
             // per-commit added/removed vs the lineage parent (Iceberg
             // snapshot-summary counts); root commits count everything
             // added, a vacuumed parent yields nulls
-            val parent = m.parent.getOrElse(v - 1)
             val diff: Option[(Int, Long, Int)] =
-              if (parent < 0) Some((m.files.length, m.files.map(_.rows).sum, 0))
-              else mf(parent).map { pm =>
+              if (m.parent < 0) Some((m.files.length, m.files.map(_.rows).sum, 0))
+              else mf(m.parent).map { pm =>
                 val pk = pm.files.map(_.key).toSet
                 val ck = m.files.map(_.key).toSet
                 val added = m.files.filterNot(x => pk.contains(x.key))
@@ -730,8 +726,8 @@ class GeoMetaTable(tableName: String, sparkAtLoad: SparkSession, root: String,
                   pm.files.count(x => !ck.contains(x.key)))
               }
             // operation provenance (Iceberg snapshot-summary analog);
-            // "--" = pre-op manifest or a tool's direct write
-            InternalRow(v, ts * 1000L,
+            // "--" = a tool's direct write
+            InternalRow(v, m.commitTs * 1000L,
               UTF8String.fromString(m.op.getOrElse("--")), m.files.length, m.totalRows,
               diff.map(d => Int.box(d._1)).orNull,
               diff.map(d => Long.box(d._2)).orNull,
@@ -823,7 +819,7 @@ class GeoMetaTable(tableName: String, sparkAtLoad: SparkSession, root: String,
             UTF8String.fromString(e.cols.mkString(",")), null, null,
             UTF8String.fromString(e.path)))).toArray
       // the current snapshot's metadata inventory (Iceberg all_manifests
-      // analog): the list manifest + its v5 shards, with entry counts and
+      // analog): the list manifest + its shards, with entry counts and
       // on-disk sizes — the ops surface for shard-fold health
       case "manifests" =>
         val m = GeoManifest.read(sparkAtLoad, root)

@@ -115,9 +115,8 @@ object GeoChangelog {
     while (w > vFrom) {
       chain += w
       val p =
-        if (parentMemo == null) GeoManifest.parentOf(spark, root, w).getOrElse(w - 1)
-        else parentMemo.getOrElseUpdate(w,
-          GeoManifest.parentOf(spark, root, w).getOrElse(w - 1))
+        if (parentMemo == null) GeoManifest.parentOf(spark, root, w)
+        else parentMemo.getOrElseUpdate(w, GeoManifest.parentOf(spark, root, w))
       require(p < w, s"corrupt lineage at $root: m$w.txt claims parent $p")
       w = p
     }
@@ -215,8 +214,7 @@ object GeoChangelog {
     chain.reverse.map { v =>
       val cur = GeoManifest.readVersion(spark, root, v)
       val (added, removed, newDel, newEq) = stepDiff(prev, cur)
-      val step = VersionStep(v,
-        cur.commitTs.getOrElse(GeoManifest.commitTsOf(spark, root, v)),
+      val step = VersionStep(v, cur.commitTs,
         added = added, removed = removed,
         addedDeletes = newDel, addedEqDeletes = newEq,
         prevManifest = Some(prev))

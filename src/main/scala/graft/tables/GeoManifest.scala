@@ -18,44 +18,49 @@ import java.nio.charset.StandardCharsets
  * before Spark ever opens a footer — at 100k-file scale that is the
  * difference between listing metadata and reading 100k parquet footers.
  *
- * Format (line-oriented text, tab-separated; no external JSON dep):
+ * Format (line-oriented text, tab-separated; no external JSON dep). One
+ * layout, written by every commit and the only one the reader accepts;
+ * lines appear in this order:
  * {{{
- *   graftgeo  3
- *   ts        <commit wall-clock, epoch millis>
- *   parent    <lineage parent version; -1 for the root commit>
- *   schema    <StructType.json — carries GEOMETRY field metadata>
- *   geom      <geometry column name, or -- when none>
- *   dropped   <tombstoned column name>                  (0..n lines)
- *   stream    <sinkId>  <last committed batchId>        (0..n lines)
- *   file      <path>  <rows>  <xmin>  <ymin>  <xmax>  <ymax>
+ *   graftgeo   10
+ *   ts         <commit wall-clock, epoch millis>
+ *   parent     <lineage parent version; -1 for the root commit>
+ *   op         <operation label>                          (0..1)
+ *   check      <name>  <SQL>                              (0..n)
+ *   picked     <version,version,...>                      (0..1)
+ *   prop       <key>  <value>                             (0..n)
+ *   schema     <StructType.json — carries GEOMETRY field metadata>
+ *   geom       <geometry column name, or -- when none>
+ *   dropped    <tombstoned column name>                   (0..n)
+ *   stream     <sinkId>  <last committed batchId>         (0..n)
+ *   partition  <transform of the current spec>            (0..n)
+ *   curspec    <current spec id>
+ *   spec       <retired spec id>  <transform>...          (0..n)
+ *   file       <path> <rows> <xmin> <ymin> <xmax> <ymax>
+ *              <addedAt> <spec> <null bits, - = unknown> [<lo> <hi>]...
+ *   shard      <shard file name>  <entry count>           (instead of file lines)
+ *   delete     <path>  <rows>                             (0..n)
+ *   eqdelete   <path> <rows> <version> <col,col> [<kmin> <kmax> [<lo|-> <hi|->]...]
+ *   colstat    <column> <ndv> <nulls> [<min> <max>]       (0..n)
+ *   bloomspec  <column> <fpp> <items>                     (0..n)
+ *   bloom      <path>  <col,col>                          (0..n)
+ *   end        <CRC32 of every preceding byte, 8 hex digits>
  * }}}
- * Version history: v1 had only schema/geom/file lines; v2 added `dropped`
- * (schema-evolution tombstones) and `stream` (streaming sink exactly-once
- * watermarks); v3 added `ts` — the commit timestamp INSIDE the manifest,
- * so TIMESTAMP AS OF and the snapshots/history metadata tables survive
- * filesystem copies and clock-skewed writers that reorder file mtimes
- * (Iceberg stores commit timestamps in metadata for the same reason;
- * v1/v2 manifests fall back to mtime); v5 shards the file list — above
- * `spark.graft.manifest.shardSize` entries the manifest becomes a LIST
- * whose `shard <name> <count>` lines reference immutable shard files
- * (`_manifests/s-*.txt`, `file` lines only), the Iceberg
- * manifest-list/manifest split: an append commit rewrites one small
- * shard plus the list instead of the full file inventory, so commit
- * metadata cost is O(changed files), not O(table); v6 adds equality
- * deletes — `eqdelete <path> <rows> <version> <col,col>` sidecar lines
- * plus a per-file data sequence number (`addedAt`, written after the
- * bbox on `file` lines; shard files carrying it bump their own header
- * to `graftshard 2`). Readers SKIP unknown line tags ONLY when the
- * manifest declares a format version newer than the reader knows
- * (additive v7+ tags won't break this reader); an unknown tag in a
- * v1–v6 manifest is corruption and fails hard — skipping it would turn
- * a torn line into silently missing data files. v9 adds partition-spec
- * evolution (`ALTER TABLE ... SET PARTITIONED BY`): `curspec` names the
- * current spec id, `spec <id> <transform...>` lines carry each retired
- * spec's transform list, and file lines gain a trailing `S<spec>` token
- * (absent = spec 0) — a file's pstats are positional against ITS OWN
- * spec, so pre-9 readers must refuse these manifests rather than prune
- * old files against the wrong transforms.
+ * `ts` keeps the commit timestamp INSIDE the manifest, so TIMESTAMP AS
+ * OF and the snapshots/history metadata tables survive filesystem copies
+ * and clock-skewed writers that reorder file mtimes (Iceberg stores
+ * commit timestamps in metadata for the same reason). At
+ * `spark.graft.manifest.shardSize` entries and above the manifest becomes
+ * a LIST whose `shard` lines reference immutable shard files
+ * (`_manifests/s-*.txt`: a `graftshard 10` header, then `file` lines
+ * only) — the Iceberg manifest-list/manifest split, so an append commit
+ * rewrites one small shard plus the list instead of the full file
+ * inventory. A file's pstats pairs are positional against ITS OWN
+ * partition spec (`spec` column; `partition` lines are the current
+ * spec, `spec` lines the retired ones). The `end` trailer is mandatory:
+ * a manifest without it, with any byte changed, or with any other
+ * header or tag fails the read loudly — a torn or foreign line never
+ * turns into silently missing data files.
  * Layout under a table root:
  * {{{
  *   <root>/_manifests/m<N>.txt   manifest per version (immutable)
@@ -72,11 +77,9 @@ object GeoManifest {
     * geometry (empty file or no geometry column). `addedAt` is the data
     * sequence number (Iceberg analog): the commit version that introduced
     * the file. -1 = freshly built this commit (stamped to the committing
-    * version inside [[write]]); 0 for files parsed from pre-v6 manifests
-    * (they predate every possible equality delete, so "oldest" is exact).
-    * An equality delete applies to a file iff `addedAt < delete.version` —
-    * which is what lets a keyed upsert (delete + append in one commit)
-    * leave its own fresh rows alive.
+    * version inside [[write]]). An equality delete applies to a file iff
+    * `addedAt < delete.version` — which is what lets a keyed upsert
+    * (delete + append in one commit) leave its own fresh rows alive.
     *
     * `pnulls(i)` = transform i's SOURCE column held at least one NULL in
     * this file. min/max stats ignore nulls, so `pstats` alone cannot
@@ -85,8 +88,8 @@ object GeoManifest {
     * a file is single-valued (null rows would be mis-clustered under
     * KeyGroupedPartitioning: duplicate NULL groups in exchange-eliminated
     * GROUP BY, missed matches in null-safe joins). Empty = unknown
-    * (pre-flag manifest lines): pruning is unaffected, SPJ is disabled
-    * for the file — the conservative direction.
+    * (written `-`): pruning is unaffected, SPJ is disabled for the file —
+    * the conservative direction.
     *
     * `spec` is the PARTITION SPEC the file's pstats were recorded under
     * (Iceberg spec-id analog): after `ALTER TABLE ... SET PARTITIONED
@@ -94,9 +97,8 @@ object GeoManifest {
     * nothing rewrites the data — and every stats consumer must resolve
     * the file's own transform list before indexing into pstats. -1 =
     * freshly built this commit (stamped to the committing manifest's
-    * current spec inside [[write]]); 0 for files parsed from manifests
-    * without a spec token (pre-evolution tables have exactly one spec,
-    * id 0). */
+    * current spec inside [[write]]); a table that never evolved its spec
+    * has exactly one, id 0. */
   final case class FileEntry(path: String, rows: Long,
                              xmin: Double, ymin: Double, xmax: Double, ymax: Double,
                              pstats: Seq[(Long, Long)] = Seq.empty,
@@ -125,9 +127,9 @@ object GeoManifest {
     * commit and the streaming checkpoint write) is detected and skipped —
     * the same idempotence mechanism as Iceberg's streaming sink. */
   /** `commitTs` is the commit wall-clock (epoch millis) read from the
-    * manifest's `ts` line; None for pre-v3 manifests (readers fall back
-    * to the manifest file's mtime). It is stamped at write time — a
-    * `copy()`-derived next version never carries the base's ts. */
+    * manifest's `ts` line; 0 on a manifest not yet committed. It is
+    * stamped at write time — a `copy()`-derived next version never
+    * carries the base's ts. */
   /** One immutable position-delete sidecar (merge-on-read): a parquet
     * file of (file_path, pos) pairs naming rows that are deleted from
     * data files still in the manifest. Entries bind to the exact data
@@ -213,7 +215,7 @@ object GeoManifest {
   final case class ColStat(ndv: Long, nulls: Long,
                            min: Option[Long], max: Option[Long])
 
-  /** One immutable manifest shard (v5): `name` under `<root>/_manifests/`,
+  /** One immutable manifest shard: `name` under `<root>/_manifests/`,
     * holding a slice of the version's `file` lines. `baseShards` on a
     * read manifest records the layout so the NEXT commit can reference
     * unchanged shards instead of rewriting the full file list; derived
@@ -224,9 +226,8 @@ object GeoManifest {
     * commit) — the lineage line that keeps branch-staged and torn-orphan
     * manifests OUT of main history: changelog/versionAsOf/metadata walks
     * follow the parent chain from `_current`, never consecutive numbers
-    * (Iceberg records parent-snapshot-id for the same reason). `None` on
-    * a READ manifest means a pre-lineage file (walks fall back to the
-    * consecutive predecessor, the status-quo assumption of that era). */
+    * (Iceberg records parent-snapshot-id for the same reason). The commit
+    * paths set it to their optimistic base. */
   /** `partitions` is the CURRENT spec's transform list — every write
     * path (layout clustering, stats collection, SPJ sort orders) uses it
     * unchanged. `specId` names it; `pastSpecs` holds every RETIRED
@@ -239,12 +240,12 @@ object GeoManifest {
                             geomCol: Option[String], files: Seq[FileEntry],
                             dropped: Seq[String] = Seq.empty,
                             streamCommits: Map[String, Long] = Map.empty,
-                            commitTs: Option[Long] = None,
+                            commitTs: Long = 0L,
                             deletes: Seq[DeleteEntry] = Seq.empty,
                             partitions: Seq[GeoPartition.PTransform] = Seq.empty,
                             baseShards: Seq[ShardRef] = Seq.empty,
                             eqDeletes: Seq[EqDeleteEntry] = Seq.empty,
-                            parent: Option[Int] = None,
+                            parent: Int = -1,
                             colStats: Map[String, ColStat] = Map.empty,
                             pastSpecs: Map[Int, Seq[GeoPartition.PTransform]] = Map.empty,
                             specId: Int = 0,
@@ -393,7 +394,7 @@ object GeoManifest {
           s"GeoTable at $root moved to version ${cur.orNull} while this operation " +
             s"was based on $expectedBase; re-read and retry")
       // the optimistic base IS the commit's lineage parent
-      write0(spark, root, remapVersion(spark, root, m).copy(parent = Some(expectedBase)))
+      write0(spark, root, remapVersion(spark, root, m).copy(parent = expectedBase))
     }
   }
 
@@ -448,7 +449,7 @@ object GeoManifest {
         throw new java.util.ConcurrentModificationException(
           s"branch '$branch' of $root moved to ${b.head} while this operation " +
             s"was based on $expectedHead; re-read and retry")
-      val fixed = remapVersion(spark, root, m).copy(parent = Some(expectedHead))
+      val fixed = remapVersion(spark, root, m).copy(parent = expectedHead)
       writeManifestFile(spark, root, fixed)
       writeRefs(spark, root, r.copy(branches =
         r.branches + (branch -> b.copy(head = fixed.version))))
@@ -456,37 +457,31 @@ object GeoManifest {
     }
   }
 
-  /** v6 file lines add `addedAt` at a fixed position between the bbox and
-    * the partition-stat pairs; pre-v6 lines omit it (parsed as 0). A
-    * trailing `N<bits>` token (bit i = transform i's source column saw a
-    * NULL in this file) rides after the pairs when the writer recorded
-    * the flags — self-describing (no digit-only field can start with
-    * 'N'), so it is stripped before the parity-based addedAt
-    * disambiguation and old readers of the era that skipped unknown
-    * LINES never see it mid-line. Absent token = unknown.
-    *
-    * A trailing `S<specId>` token (after the N token, likewise
-    * self-describing) records the partition spec the file's pstats were
-    * recorded under; it is only emitted for spec > 0 — absent parses as
-    * spec 0, which is exact for every pre-evolution file. */
-  private def fileLine(e: FileEntry, v6: Boolean): String = {
-    val ps = if (e.pstats.isEmpty) ""
-             else e.pstats.map { case (a, b) => s"\t$a\t$b" }.mkString
-    val seq = if (v6) s"\t${e.addedAt}" else ""
+  /** The one on-disk layout: the list file's and every shard file's first
+    * line. A table written under any other layout fails its read (see
+    * [[requireHeader]]) rather than being misparsed. */
+  private val Format = 10
+  private val ManifestHeader = s"graftgeo\t$Format"
+  private val ShardHeader = s"graftshard\t$Format"
+
+  /** Fixed positions: path, rows, bbox, addedAt, spec, the saw-null bits
+    * (bit i = transform i's source column held a NULL in this file; `-`
+    * when unknown), then the per-transform min/max pairs. */
+  private def fileLine(e: FileEntry): String = {
     val nulls =
-      if (e.pstats.nonEmpty && e.pnulls.length == e.pstats.length) {
-        val bits = e.pnulls.zipWithIndex.foldLeft(0L) {
+      if (e.pstats.nonEmpty && e.pnulls.length == e.pstats.length)
+        e.pnulls.zipWithIndex.foldLeft(0L) {
           case (acc, (true, i)) => acc | (1L << i)
           case (acc, _) => acc
-        }
-        s"\tN$bits"
-      } else ""
-    val spec = if (e.spec > 0) s"\tS${e.spec}" else ""
-    s"file\t${e.path}\t${e.rows}\t${e.xmin}\t${e.ymin}\t${e.xmax}\t${e.ymax}$seq$ps$nulls$spec\n"
+        }.toString
+      else "-"
+    val ps = e.pstats.map { case (a, b) => s"\t$a\t$b" }.mkString
+    s"file\t${e.path}\t${e.rows}\t${e.xmin}\t${e.ymin}\t${e.xmax}\t${e.ymax}" +
+      s"\t${e.addedAt}\t${e.spec}\t$nulls$ps\n"
   }
 
-  /** Files-per-shard for v5 manifest lists. Below this many entries the
-    * file list stays inline (v3/v4) — the measured envelope
+  /** Files-per-shard for manifest lists. Below this many entries the
+    * file list stays inline — the measured envelope
     * (ManifestScale) holds one text read to ~1M files, but every commit
     * rewrites it all; sharding makes commits O(changed files). */
   def shardSize(spark: SparkSession): Int =
@@ -497,8 +492,7 @@ object GeoManifest {
     * unchanged; shards at or below ss/4 entries are folded back into the
     * fresh pool so repeated single-file appends cannot grow the shard
     * list without bound (amortized O(ss) rewrite per commit). */
-  private def writeShards(f: FileSystem, root: String, m: Manifest, ss: Int,
-                          v6: Boolean): Seq[ShardRef] = {
+  private def writeShards(f: FileSystem, root: String, m: Manifest, ss: Int): Seq[ShardRef] = {
     // Identity-based coverage: derived manifests share FileEntry
     // INSTANCES with the base they were read from (every mutation is a
     // copy() around the read file list), so membership checks need no
@@ -523,19 +517,8 @@ object GeoManifest {
     }
     val freshRefs = fresh.grouped(ss).map { es =>
       val name = s"s-${java.util.UUID.randomUUID().toString.take(13)}.txt"
-      // shard layout rides its OWN header (readers gate on it, not on the
-      // referencing manifest's version): 2 = v6 file lines with addedAt;
-      // 3 = lines may carry the saw-null token (layout-2 parsing plus
-      // the self-describing trailing token); 4 = lines may additionally
-      // carry the S<spec> token (partition-spec evolution)
-      val v8 = es.exists(e =>
-        e.pstats.nonEmpty && e.pnulls.length == e.pstats.length)
-      val v9 = es.exists(_.spec > 0)
-      val sb = new StringBuilder(
-        if (v9) "graftshard\t4\n"
-        else if (v8) "graftshard\t3\n"
-        else if (v6) "graftshard\t2\n" else "graftshard\t1\n")
-      es.foreach(e => sb ++= fileLine(e, v6))
+      val sb = new StringBuilder(ShardHeader).append('\n')
+      es.foreach(e => sb ++= fileLine(e))
       writeText(f, new Path(root, s"_manifests/$name"), sb.toString)
       ShardRef(name, es)
     }.toSeq
@@ -572,78 +555,30 @@ object GeoManifest {
     // whose key range misses every remaining file's range is equally
     // dead: GC both here. Range applicability resolves each file's OWN
     // spec's transforms (the stamped list shares specs with m0).
-    val specsOfM0 = GeoPartition.SpecSet(m0.specId, m0.pastSpecs + (m0.specId -> m0.partitions))
-    val liveEq = m0.eqDeletes.filter(e =>
-      stamped.exists(f => eqApplies(specsOfM0.of(f), e, f)))
+    val liveEq = m0.eqDeletes.filter(e => stamped.exists(f => m0.eqApplies(e, f)))
     val m = m0.copy(files = stamped, eqDeletes = liveEq)
-    val sharded = m.files.length >= ss
-    val v6 = m.eqDeletes.nonEmpty
-    val lines = new StringBuilder()
-    // format 4 adds `delete` sidecar lines, `partition` transform lines
-    // and per-file partition stats; format 5 shards the file list above
-    // the size threshold; format 6 adds `eqdelete` lines and per-file
-    // data sequence numbers (needed only while equality deletes are
-    // live); format 7 adds `colstat` lines (ANALYZE column statistics —
-    // v6-era readers skip unknown tags in declared-v7+ manifests by
-    // design, so 7 is additive). Format 8 appends the saw-null token to
-    // file lines. Because it changes a KNOWN tag's layout it is declared
-    // explicitly, and from format 8 on readers enforce a version CEILING
-    // (see readVersion): future layout changes declare 9+ and an
-    // 8-capable reader refuses them loudly instead of misparsing —
-    // additive new-TAG changes keep declaring <= 8 and ride the
-    // skip-unknown-tags rule instead. Tables needing none of this keep
-    // writing 3 so older snapshots stay bit-stable for existing readers.
-    // The trigger matches fileLine's token-emit condition EXACTLY: an
-    // entry whose pnulls cannot serialize must not bump the format.
-    // Format 9 = partition-spec evolution: `curspec`/`spec` lines plus
-    // per-file S tokens change how pstats are INTERPRETED, so a pre-9
-    // reader must refuse loudly (it would prune old-spec files against
-    // the wrong transform list — silent row loss), hence the explicit
-    // declaration whenever the table has ever evolved its spec.
-    // bloom tags are ADDITIVE (unknown tags skip under a declared-8+
-    // manifest, and skipping a bloom line only loses an optimization) but
-    // still need the declared format raised to >= 8 so pre-8 readers use
-    // the skip-unknown-tags rule instead of failing on them
-    val v8 = m.files.exists(e =>
-      e.pstats.nonEmpty && e.pnulls.length == e.pstats.length && e.pnulls.nonEmpty) ||
-      m.bloomCols.nonEmpty || m.blooms.nonEmpty || m.op.nonEmpty ||
-      m.checks.nonEmpty || m.picked.nonEmpty || m.props.nonEmpty
-    val v9 = m.pastSpecs.nonEmpty || m.specId != 0
-    val declared = if (v9) 9
-                   else if (v8) 8
-                   else if (m.colStats.nonEmpty) 7
-                   else if (v6) 6
-                   else if (sharded) 5
-                   else if (m.deletes.nonEmpty || m.partitions.nonEmpty) 4
-                   else 3
-    lines ++= s"graftgeo\t$declared\n"
+    val lines = new StringBuilder(ManifestHeader).append('\n')
     // always stamp NOW: manifests are derived from the base via copy(),
     // and inheriting the base's commit ts would corrupt the history order
     lines ++= s"ts\t${System.currentTimeMillis()}\n"
-    // lineage: direct write() callers (root commits, tools) default to the
-    // consecutive predecessor — exactly what their callers mean
-    lines ++= s"parent\t${m.parent.getOrElse(m.version - 1)}\n"
-    // operation provenance (Iceberg snapshot-summary `operation` analog):
-    // pure metadata — a reader that dropped it would lose nothing — but
-    // an ADDITIVE tag, so like bloom lines it rides the skip-unknown-tags
-    // rule: recording it raises the declared format to >= 8 (the v8
-    // trigger above) so pre-8 readers skip it instead of treating it as
-    // a torn line. Absent = unknown ("--").
+    lines ++= s"parent\t${m.parent}\n"
+    // operation provenance (Iceberg snapshot-summary `operation` analog);
+    // absent = a tool's direct write
     m.op.foreach { o => lines ++= s"op\t$o\n" }
-    // CHECK constraints (Delta-parity): additive v8+ tag like `op` —
-    // enforced by every writer that reads this manifest; the SQL text is
-    // tab/newline-free by the ADD CONSTRAINT verb's contract
+    // CHECK constraints (Delta-parity), enforced by every writer that
+    // reads this manifest; the SQL text is tab/newline-free by the ADD
+    // CONSTRAINT verb's contract
     m.checks.foreach { case (n, sql) => lines ++= s"check\t$n\t$sql\n" }
     // cherry-picked source snapshot ids (Iceberg source-snapshot-id
     // tracking): the idempotence record that survives OPTIMIZE retiring
-    // the picked files' paths — additive v8+ tag like `op`
+    // the picked files' paths
     if (m.picked.nonEmpty)
       lines ++= s"picked\t${m.picked.toSeq.sorted.mkString(",")}\n"
-    // user table properties (Iceberg/Delta TBLPROPERTIES analog): additive
-    // v8+ tag like `op`. They ride EVERY commit via copy(), so a property
-    // set and the data change it describes can share one atomic commit
-    // (setProperties validates keys/values newline-free and keys tab-free;
-    // values rejoin on read like `check` lines, so embedded tabs survive)
+    // user table properties (Iceberg/Delta TBLPROPERTIES analog). They
+    // ride EVERY commit via copy(), so a property set and the data change
+    // it describes can share one atomic commit (setProperties validates
+    // keys/values newline-free and keys tab-free; values rejoin on read
+    // like `check` lines, so embedded tabs survive)
     m.props.toSeq.sortBy(_._1).foreach { case (k, v) =>
       lines ++= s"prop\t$k\t$v\n"
     }
@@ -656,25 +591,21 @@ object GeoManifest {
     m.partitions.foreach { p => lines ++= s"partition\t${p.encode}\n" }
     // spec evolution bookkeeping: `curspec` names the id of the CURRENT
     // spec (the `partition` lines above); each `spec` line is a retired
-    // spec's full transform list, tab-separated. Only written at v9.
-    if (v9) {
-      lines ++= s"curspec\t${m.specId}\n"
-      m.pastSpecs.toSeq.sortBy(_._1).foreach { case (id, ts) =>
-        lines ++= (s"spec\t$id" + ts.map(t => s"\t${t.encode}").mkString + "\n")
-      }
+    // spec's full transform list, tab-separated
+    lines ++= s"curspec\t${m.specId}\n"
+    m.pastSpecs.toSeq.sortBy(_._1).foreach { case (id, ts) =>
+      lines ++= (s"spec\t$id" + ts.map(t => s"\t${t.encode}").mkString + "\n")
     }
-    if (sharded)
-      writeShards(f, root, m, ss, v6).foreach { s =>
+    if (m.files.length >= ss)
+      writeShards(f, root, m, ss).foreach { s =>
         lines ++= s"shard\t${s.name}\t${s.entries.length}\n"
       }
-    else m.files.foreach { e => lines ++= fileLine(e, v6) }
+    else m.files.foreach { e => lines ++= fileLine(e) }
     m.deletes.foreach { d => lines ++= s"delete\t${d.path}\t${d.rows}\n" }
     m.eqDeletes.foreach { e =>
-      // optional trailing kmin/kmax: readers take parts 1-4 and ignore a
-      // missing tail, so old manifests and range-less sidecars parse
-      // alike. Tail-column ranges (full-tuple bound) follow as further
-      // pairs, '-' marking a column with no embedding — additive: old
-      // short lines parse as leading-only.
+      // optional trailing kmin/kmax for the leading key column, then the
+      // tail columns' ranges as further pairs, '-' marking a column with
+      // no long embedding; no range at all = applies everywhere
       val range = (e.kmin, e.kmax) match {
         case (Some(a), Some(b)) =>
           val tail = e.kranges.map {
@@ -699,19 +630,12 @@ object GeoManifest {
     m.blooms.foreach { e =>
       lines ++= s"bloom\t${e.path}\t${e.cols.mkString(",")}\n"
     }
-    // Integrity trailer: declared-8+ manifests SKIP unknown tags (the
-    // additive-format rule), which forfeits the <=7 torn-line protection
-    // (a mangled tag would silently drop a data file). The `end` CRC32 of
-    // every preceding byte restores it, strictly stronger: any in-file
-    // mangling — tag OR field bytes — fails the read loudly. Additive for
-    // existing 8/9 readers (unknown tag, skipped); never written at <=7,
-    // where the throw-on-unknown-tag rule still holds and bit-stability
-    // matters.
-    if (declared >= 8) {
-      val crc = new java.util.zip.CRC32()
-      crc.update(lines.toString.getBytes(StandardCharsets.UTF_8))
-      lines ++= f"end\t${crc.getValue}%08x\n"
-    }
+    // integrity trailer: the CRC32 of every preceding byte, so any
+    // in-file mangling — tag OR field bytes — or a torn tail fails the
+    // read loudly instead of silently dropping or misparsing a line
+    val crc = new java.util.zip.CRC32()
+    crc.update(lines.toString.getBytes(StandardCharsets.UTF_8))
+    lines ++= f"end\t${crc.getValue}%08x\n"
     // manifest first (immutable, new name); the caller flips the pointer
     // (`_current` for main commits, the branch ref for branch commits)
     // last. The main flip is an in-place truncate+write of a few bytes;
@@ -727,42 +651,73 @@ object GeoManifest {
     readVersion(spark, root, v)
   }
 
-  private def parseFileEntry(parts: Array[String], v6: Boolean): FileEntry = {
-    // v6 carries addedAt after the bbox; trailing pairs (if any) are
-    // per-partition-transform min/max. Pre-v6 files predate every
-    // possible equality delete, so addedAt = 0 is exact. Field-count
-    // parity disambiguates: a v6 line has an ODD tail (addedAt + pairs),
-    // a legacy-layout line under a newer declared format (hand-migrated
-    // manifest, or an additive future format keeping old file lines) has
-    // an EVEN tail and parses as addedAt 0.
-    // trailing self-describing tokens strip in reverse write order —
-    // S<spec> (last), then N<bits> — BEFORE the parity check so neither
-    // perturbs addedAt detection
-    val (afterSpec, spec) =
-      if (parts.length > 7 && parts.last.length > 1 && parts.last.head == 'S' &&
-          parts.last.drop(1).forall(_.isDigit))
-        (parts.dropRight(1), parts.last.drop(1).toInt)
-      else (parts, 0)
-    val (body, nullBits) =
-      if (afterSpec.length > 7 && afterSpec.last.length > 1 && afterSpec.last.head == 'N' &&
-          afterSpec.last.drop(1).forall(_.isDigit))
-        (afterSpec.dropRight(1), Some(afterSpec.last.drop(1).toLong))
-      else (afterSpec, None)
-    val hasSeq = v6 && (body.length - 7) % 2 == 1
-    val addedAt = if (hasSeq) body(7).toInt else 0
-    val ps = body.drop(if (hasSeq) 8 else 7).grouped(2).collect {
-      case Array(a, b) => (a.toLong, b.toLong)
-    }.toSeq
-    val pn = nullBits match {
-      case Some(bits) => ps.indices.map(i => (bits & (1L << i)) != 0L)
-      case None => Seq.empty[Boolean]
-    }
-    FileEntry(parts(1), parts(2).toLong,
-      parts(3).toDouble, parts(4).toDouble, parts(5).toDouble, parts(6).toDouble,
-      ps, addedAt, pn, spec)
+  /** Fail a manifest or shard file whose first line is not this
+    * library's one layout header: a table written in an earlier layout is
+    * refused, never guessed at. */
+  private def requireHeader(text: String, header: String, file: String, root: String): Unit =
+    if (!text.startsWith(header + "\n"))
+      throw new IllegalArgumentException(
+        s"$file at $root starts with '${text.takeWhile(_ != '\n').take(40)}', not " +
+          s"'${header.replace('\t', ' ')}': it is in a manifest layout this library " +
+          "does not read; rewrite the table (export its rows with the library " +
+          "version that wrote it and create the table anew)")
+
+  private def badLine(file: String, root: String, line: String) =
+    new IllegalArgumentException(s"bad manifest line in $file at $root: '$line'")
+
+  /** The body lines of manifest `m<v>.txt`: the header is checked and the
+    * mandatory `end` trailer verified against the CRC32 of every byte
+    * before it; both are stripped. */
+  private def manifestLines(f: FileSystem, root: String, v: Int): Array[String] = {
+    val file = s"m$v.txt"
+    val text = readText(f, new Path(root, s"_manifests/$file"))
+    requireHeader(text, ManifestHeader, file, root)
+    val endAt = text.lastIndexOf("\nend\t")
+    require(endAt >= 0, s"manifest $file at $root has no end trailer (torn write)")
+    val nl = text.indexOf('\n', endAt + 1)
+    val stop = if (nl < 0) text.length else nl
+    require(text.substring(stop).forall(_ == '\n'),
+      s"manifest $file at $root has content after its end trailer " +
+        "(torn or tampered write)")
+    val crc = new java.util.zip.CRC32()
+    crc.update(text.substring(0, endAt + 1).getBytes(StandardCharsets.UTF_8))
+    require(f"${crc.getValue}%08x" == text.substring(endAt + "\nend\t".length, stop),
+      s"manifest $file at $root fails its end checksum (corrupted or torn write)")
+    text.substring(0, endAt).split('\n').drop(1)
   }
 
-  /** Read v5 shard files, in parallel — a 1M-file table is ~40 shard
+  /** (ts, parent, op) from the fixed first lines of a manifest body. */
+  private def header(lines: Array[String], file: String, root: String)
+      : (Long, Int, Option[String]) = {
+    def tagged(i: Int, tag: String): Option[String] =
+      lines.lift(i).filter(_.startsWith(tag + "\t")).map(_.substring(tag.length + 1))
+    def missing(tag: String) =
+      new IllegalArgumentException(s"manifest $file at $root has no $tag line")
+    (tagged(0, "ts").getOrElse(throw missing("ts")).toLong,
+      tagged(1, "parent").getOrElse(throw missing("parent")).toInt,
+      tagged(2, "op"))
+  }
+
+  /** One `file` line in the positional layout of [[fileLine]]. */
+  private def parseFileEntry(parts: Array[String], file: String, root: String): FileEntry = {
+    def bad = badLine(file, root, parts.mkString("\t"))
+    if (parts.length < 10) throw bad
+    val ps = parts.drop(10).grouped(2).map {
+      case Array(a, b) => (a.toLong, b.toLong)
+      case _ => throw bad
+    }.toSeq
+    val pn =
+      if (parts(9) == "-") Seq.empty[Boolean]
+      else {
+        val bits = parts(9).toLong
+        ps.indices.map(i => (bits & (1L << i)) != 0L)
+      }
+    FileEntry(parts(1), parts(2).toLong,
+      parts(3).toDouble, parts(4).toDouble, parts(5).toDouble, parts(6).toDouble,
+      ps, parts(7).toInt, pn, parts(8).toInt)
+  }
+
+  /** Read shard files, in parallel — a 1M-file table is ~40 shard
     * reads, and on remote filesystems the per-file round-trip dominates. */
   private def readShards(f: FileSystem, root: String, v: Int,
                          names: Seq[String]): Seq[ShardRef] = {
@@ -772,60 +727,33 @@ object GeoManifest {
       val futs = names.map { n =>
         pool.submit(new java.util.concurrent.Callable[ShardRef] {
           override def call(): ShardRef = {
-            // layout rides the shard's own header: 2 = v6 file lines. A
-            // v6 manifest can reuse layout-1 shards (their files predate
-            // equality deletes; addedAt 0 is exact) and vice versa.
-            var shardV6 = false
-            val entries = readText(f, new Path(root, s"_manifests/$n"))
-              .split('\n').filter(_.nonEmpty).toSeq.flatMap { line =>
-                val parts = line.split('\t')
-                parts(0) match {
-                  case "graftshard" =>
-                    // same ceiling rule as the manifest header: a newer
-                    // shard layout must refuse loudly, not misparse
-                    require(parts(1).toInt <= 4,
-                      s"unsupported shard layout ${parts(1)} in $n at $root " +
-                        "(newer than this reader)")
-                    shardV6 = parts(1).toInt >= 2; None
-                  case "file" => Some(parseFileEntry(parts, shardV6))
-                  case _ => throw new IllegalArgumentException(
-                    s"bad shard line in $n (manifest m$v.txt) at $root: '$line'")
-                }
-              }
+            val file = s"$n (shard of m$v.txt)"
+            val text = readText(f, new Path(root, s"_manifests/$n"))
+            requireHeader(text, ShardHeader, file, root)
+            val entries = text.split('\n').toSeq.drop(1).map { line =>
+              val parts = line.split('\t')
+              if (parts(0) != "file") throw badLine(file, root, line)
+              parseFileEntry(parts, file, root)
+            }
             ShardRef(n, entries)
           }
         })
       }
-      futs.map(_.get())
+      // surface a bad shard's own error (it names the file), not the wrapper
+      futs.map { fu =>
+        try fu.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
     } finally pool.shutdown()
   }
 
   def readVersion(spark: SparkSession, root: String, v: Int): Manifest = {
     val f = fs(spark, root)
-    val text = readText(f, new Path(root, s"_manifests/m$v.txt"))
-    // `end` integrity trailer (written by declared-8+ writers): CRC32 of
-    // every byte before the trailer line. Verified BEFORE tag parsing —
-    // 8+ readers skip unknown tags by design, so a mangled line would
-    // otherwise vanish silently; the checksum fails it loudly instead.
-    // Absent trailer = legacy manifest, parses as before.
-    val endAt = text.lastIndexOf("\nend\t")
-    if (endAt >= 0) {
-      val nl = text.indexOf('\n', endAt + 1)
-      val stop = if (nl < 0) text.length else nl
-      val claimed = text.substring(endAt + "\nend\t".length, stop).trim
-      require(text.substring(stop).forall(_ == '\n'),
-        s"manifest m$v.txt at $root has content after its end trailer " +
-          "(torn or tampered write)")
-      val crc = new java.util.zip.CRC32()
-      crc.update(text.substring(0, endAt + 1).getBytes(StandardCharsets.UTF_8))
-      require(f"${crc.getValue}%08x" == claimed,
-        s"manifest m$v.txt at $root fails its end checksum (corrupted or torn write)")
-    }
+    val file = s"m$v.txt"
+    val lines = manifestLines(f, root, v)
+    val (commitTs, parent, op) = header(lines, file, root)
     var schema: StructType = null
     var geomCol: Option[String] = None
-    var commitTs: Option[Long] = None
-    var parent: Option[Int] = None
-    var declared = -1 // format version from the graftgeo header line
     val files = Seq.newBuilder[FileEntry]
     val shardNames = Seq.newBuilder[String]
     val deletes = Seq.newBuilder[DeleteEntry]
@@ -841,27 +769,13 @@ object GeoManifest {
     val checks = Seq.newBuilder[(String, String)]
     var picked = Set.empty[Int]
     var props = Map.empty[String, String]
-    var opv: Option[String] = None
-    text.split('\n').filter(_.nonEmpty).foreach { line =>
+    lines.drop(if (op.isEmpty) 2 else 3).foreach { line =>
       val parts = line.split('\t')
       parts(0) match {
-        case "graftgeo" =>
-          declared = parts(1).toInt
-          // the CEILING is load-bearing from format 8 on: a declared
-          // version above what this reader knows means a KNOWN tag's
-          // line layout may have changed — refusing loudly beats
-          // misparsing stats into wrong query results. Additive
-          // new-tag-only changes must keep declaring <= 8.
-          require(declared >= 1 && declared <= 9,
-            s"unsupported GeoTable manifest version ${parts(1)} " +
-              "(newer than this reader; upgrade the library to read this table)")
         case "schema" =>
           schema = org.apache.spark.sql.types.DataType.fromJson(
             line.substring("schema\t".length)).asInstanceOf[StructType]
         case "geom" => geomCol = Some(parts(1)).filter(_ != "--")
-        case "ts" => commitTs = Some(parts(1).toLong)
-        case "parent" => parent = Some(parts(1).toInt)
-        case "op" => opv = Some(parts(1))
         // rejoin defensively even though the verb forbids tabs in the SQL
         case "check" => checks += parts(1) -> parts.drop(2).mkString("\t")
         case "picked" => picked ++= parts(1).split(',').map(_.toInt)
@@ -871,7 +785,7 @@ object GeoManifest {
           props += parts(1) -> (if (parts.length > 2) parts.drop(2).mkString("\t") else "")
         case "dropped" => dropped += parts(1)
         case "stream" => streams += parts(1) -> parts(2).toLong
-        case "file" => files += parseFileEntry(parts, declared >= 6)
+        case "file" => files += parseFileEntry(parts, file, root)
         case "shard" => shardNames += parts(1)
         case "delete" => deletes += DeleteEntry(parts(1), parts(2).toLong)
         case "eqdelete" =>
@@ -898,53 +812,33 @@ object GeoManifest {
           bloomCols += GeoBloom.BloomSpec(parts(1), parts(2).toDouble, parts(3).toLong)
         case "bloom" =>
           blooms += GeoBloom.BloomEntry(parts(1), parts(2).split(',').toSeq)
-        case other =>
-          // Unknown tags are forward compat ONLY when the manifest declares
-          // a format newer than this reader (additive v8+ tags). In a
-          // v1–v7 manifest an unrecognized tag is corruption (e.g. a torn
-          // `file` line) — skipping it would turn a torn write into
-          // silently missing data files that the next commit persists.
-          if (declared <= 7)
-            throw new IllegalArgumentException(
-              s"bad manifest line in m$v.txt at $root (format $declared): '$line'")
+        case _ => throw badLine(file, root, line)
       }
     }
-    require(schema != null, s"manifest m$v.txt at $root has no schema line")
+    require(schema != null, s"manifest $file at $root has no schema line")
     GeoSchema.validate(schema)
     val shards = readShards(f, root, v, shardNames.result())
     shards.foreach(s => files ++= s.entries)
     Manifest(v, schema, geomCol, files.result(), dropped.result(), streams.result(),
       commitTs, deletes.result(), partitions.result(), shards, eqDeletes.result(),
       parent, colStats.result(), pastSpecs.result(), specId,
-      bloomCols.result(), blooms.result(), opv, checks.result(), picked, props)
+      bloomCols.result(), blooms.result(), op, checks.result(), picked, props)
   }
 
-  /** (commit ts, lineage parent, op) of snapshot `v` from a header-only
-    * scan of its manifest — lineage/timestamp resolution loops over
-    * versions (TIMESTAMP AS OF, history, ancestry walks), so this must not
-    * resolve v5 shard files. ts None = pre-v3 manifest (callers fall back
-    * to the file's mtime); parent None = pre-lineage manifest (callers
-    * assume v-1). */
+  /** (commit ts, lineage parent, op) of snapshot `v` from its manifest's
+    * fixed first lines — lineage/timestamp resolution loops over versions
+    * (TIMESTAMP AS OF, history, ancestry walks), so this must not parse
+    * the schema or resolve shard files. */
   private[graft] def headerOf(spark: SparkSession, root: String, v: Int)
-      : (Option[Long], Option[Int], Option[String]) = {
-    var ts: Option[Long] = None
-    var parent: Option[Int] = None
-    var op: Option[String] = None
-    readText(fs(spark, root), new Path(root, s"_manifests/m$v.txt")).split('\n').foreach { l =>
-      if (l.startsWith("ts\t")) ts = Some(l.substring(3).trim.toLong)
-      else if (l.startsWith("parent\t")) parent = Some(l.substring(7).trim.toInt)
-      else if (l.startsWith("op\t")) op = Some(l.substring(3).trim)
-    }
-    (ts, parent, op)
-  }
+      : (Long, Int, Option[String]) =
+    header(manifestLines(fs(spark, root), root, v), s"m$v.txt", root)
 
   /** Commit wall-clock of snapshot `v` (see [[headerOf]]). */
   def commitTsOf(spark: SparkSession, root: String, v: Int): Long =
-    headerOf(spark, root, v)._1.getOrElse(fs(spark, root)
-      .getFileStatus(new Path(root, s"_manifests/m$v.txt")).getModificationTime)
+    headerOf(spark, root, v)._1
 
-  /** Lineage parent of snapshot `v`; None for pre-lineage manifests. */
-  def parentOf(spark: SparkSession, root: String, v: Int): Option[Int] =
+  /** Lineage parent of snapshot `v`; -1 for a root commit. */
+  def parentOf(spark: SparkSession, root: String, v: Int): Int =
     headerOf(spark, root, v)._2
 
   /** Whether snapshot `v`'s manifest is still on disk (not vacuumed). */
@@ -963,7 +857,7 @@ object GeoManifest {
     var v = top
     while (v >= 0 && hasVersion(spark, root, v)) {
       out += v
-      val p = parentOf(spark, root, v).getOrElse(v - 1)
+      val p = parentOf(spark, root, v)
       require(p < v, s"corrupt lineage at $root: m$v.txt claims parent $p")
       v = p
     }

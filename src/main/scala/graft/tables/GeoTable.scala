@@ -360,8 +360,7 @@ object GeoTable {
     GeoManifest.write(spark, targetRoot, src.copy(
       baseShards = Seq.empty,    // inline the list; shards re-form under the clone
       streamCommits = Map.empty, // fresh sink-identity space
-      commitTs = Some(System.currentTimeMillis()),
-      parent = Some(-1)), op = "clone")
+      parent = -1), op = "clone")
     v
   }
 
@@ -594,7 +593,7 @@ object GeoTable {
       }
       doomed.result().foreach { p => if (fs.delete(p, false)) removed += 1 }
     }
-    // drop expired manifests (kept/ref'd ones stay), then GC v5 shard
+    // drop expired manifests (kept/ref'd ones stay), then GC shard
     // files no kept manifest references (dissolved by later commits, or
     // only referenced by the just-dropped manifests)
     (0 until cur.version).filterNot(keep).foreach { v =>
@@ -616,7 +615,7 @@ object GeoTable {
    * column, drop tombstones — is the target snapshot's. History is
    * preserved: time travel still reaches the undone versions until
    * vacuum expires them, and the restore itself shows up in `history`.
-   * O(1) data I/O — files are re-referenced, never copied; v5 shard
+   * O(1) data I/O — files are re-referenced, never copied; shard
    * reuse keeps even the metadata write O(changed shards).
    *
    * Streaming watermarks are deliberately NOT restored: epoch dedup must
@@ -784,9 +783,9 @@ object GeoTable {
    */
   def cherrypickSnapshot(spark: SparkSession, root: String, v: Int): Int = {
     val picked = GeoManifest.readVersion(spark, root, v)
-    val parentV = picked.parent.getOrElse(throw new IllegalArgumentException(
-      s"version $v of $root has no lineage parent — nothing to cherry-pick"))
-    val parent = GeoManifest.readVersion(spark, root, parentV)
+    require(picked.parent >= 0,
+      s"version $v of $root is a root commit — nothing to cherry-pick")
+    val parent = GeoManifest.readVersion(spark, root, picked.parent)
     def keys(m: Manifest) = m.files.map(f => GeoManifest.norm(f.path)).toSet
     val parentKeys = keys(parent)
     require((parentKeys -- keys(picked)).isEmpty &&
@@ -795,7 +794,7 @@ object GeoTable {
         "be cherry-picked; this one removed files or changed delete sidecars")
     val added = picked.files.filterNot(f => parentKeys(GeoManifest.norm(f.path)))
     require(added.nonEmpty,
-      s"version $v of $root added no files over its parent $parentV — nothing to apply")
+      s"version $v of $root added no files over its parent ${picked.parent} — nothing to apply")
     val head = GeoManifest.read(spark, root)
     // idempotence by SOURCE SNAPSHOT ID (Iceberg's source-snapshot-id
     // tracking), not just by path: after OPTIMIZE retires the picked

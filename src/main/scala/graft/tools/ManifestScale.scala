@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
 
 /**
  * Manifest-scale measurement (dev harness): how expensive are manifest
- * write / read / commit at large file counts, inline (format <=4, one
- * driver-side text file) vs sharded (format 5 manifest lists, the
- * Iceberg split)? The decisive column is commitWrites: an inline commit
+ * write / read / commit at large file counts, inline (every file line in
+ * one driver-side text file) vs sharded (a manifest list referencing
+ * shard files, the Iceberg split)? The decisive column is commitWrites: an inline commit
  * rewrites the whole inventory; a sharded append commit writes the
  * small list plus one shard (ROUND11_NOTES records the outcome).
  *
@@ -38,9 +38,9 @@ object ManifestScale {
         pstats = Seq((19000L + i % 365, 19001L + i % 365)))
     }
 
-    // inline: the whole file list in one manifest text (format <=4,
-    // shardSize forced out of reach); sharded: format 5 manifest lists
-    // (the default threshold) where commits rewrite O(changed) metadata
+    // inline: the whole file list in one manifest text (shardSize forced
+    // out of reach); sharded: manifest lists (the default threshold)
+    // where commits rewrite O(changed) metadata
     for (mode <- Seq("inline", "sharded"); n <- Seq(10000, 100000, 300000, 1000000)
          if n <= max) {
       spark.conf.set("spark.graft.manifest.shardSize",

@@ -78,6 +78,20 @@ class GeoCatalogSpec extends SparkSpec {
       s"committed_at must come from the manifest ts, got ${committedAt.toSeq}")
   }
 
+  test("all_files reports the version that added each file") {
+    warehouse
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS geo.db")
+    GeoTable.create(spark, s"$warehouse/db/added_at",
+      spark.range(1).toDF("id").coalesce(1), None)      // v0
+    spark.sql("INSERT INTO geo.db.added_at SELECT 1L")  // v1
+    spark.sql("INSERT INTO geo.db.added_at SELECT 2L")  // v2
+    // no equality delete was ever live, and each file still names the
+    // commit that added it
+    val added = spark.sql("SELECT added_at_version FROM geo.db.added_at.all_files " +
+        "ORDER BY added_at_version").as[Int].collect().toSeq
+    assert(added == Seq(0, 1, 2), s"added_at_version: $added")
+  }
+
   test("snapshots / files metadata tables resolve like Iceberg's") {
     warehouse
     spark.sql("CREATE NAMESPACE IF NOT EXISTS geo.db")

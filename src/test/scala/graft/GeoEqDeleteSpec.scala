@@ -5,7 +5,7 @@ import graft.tables.{GeoCatalog, GeoManifest, GeoPartition, GeoSql, GeoTable}
 import org.apache.spark.sql.functions._
 
 /**
- * Equality deletes (manifest v6; Iceberg v2 equality-delete analog):
+ * Equality deletes (Iceberg v2 equality-delete analog):
  * keyed DELETE/UPSERT commit a key sidecar in O(keys) — no data-file
  * scan or rewrite — and every read path anti-joins the keys back out,
  * scoped by per-file data sequence numbers so later appends (including
@@ -177,20 +177,25 @@ class GeoEqDeleteSpec extends SparkSpec {
     assert(GeoTable.read(spark, root).where($"id".isin(8L, 9L)).count() == 0)
   }
 
-  test("v6 manifest round-trips addedAt; fully-inapplicable deletes are GC'd") {
-    // pre-delete-era files all read as addedAt 0 (lazy v6: exact, they
-    // predate every possible delete); once a delete is live the manifest
-    // stays v6 and appended files PERSIST their sequence number
+  test("manifests round-trip addedAt; fully-inapplicable deletes are GC'd") {
+    // every file line carries its data sequence number: a file appended
+    // before any delete exists keeps its true version, and so do files
+    // appended while a delete is live
     val root = freshTable(40, 2)                                           // v0
-    GeoTable.deleteByKey(spark, root, Seq("id"), Seq(0L, 105L).toDF("id")) // v1
+    GeoTable.append(spark, root, spark.range(40, 50)
+      .select($"id", concat(lit("v"), $"id").as("v")))                     // v1
+    assert(GeoManifest.read(spark, root).files.map(_.addedAt).toSet == Set(0, 1),
+      "a file appended before any delete keeps its true version")
+    GeoTable.deleteByKey(spark, root, Seq("id"), Seq(0L, 45L, 105L).toDF("id")) // v2
     GeoTable.append(spark, root, spark.range(100, 110)
-      .select($"id", concat(lit("v"), $"id").as("v")))                     // v2
+      .select($"id", concat(lit("v"), $"id").as("v")))                     // v3
     val m = GeoManifest.read(spark, root)
-    assert(m.files.exists(_.addedAt == 0) && m.files.exists(_.addedAt == 2),
-      s"addedAt must persist across v6 manifests, got ${m.files.map(_.addedAt).distinct}")
-    assert(m.eqDeletes.head.version == 1)
-    // the v2 append is EXEMPT from the v1 delete: id 105 lives, id 0 does not
-    val got = GeoTable.read(spark, root).where($"id".isin(0L, 105L))
+    assert(m.files.map(_.addedAt).toSet == Set(0, 1, 3),
+      s"addedAt must persist, got ${m.files.map(_.addedAt).distinct}")
+    assert(m.eqDeletes.head.version == 2)
+    // the v3 append is EXEMPT from the v2 delete: id 105 lives, ids 0 and
+    // 45 (files added at v0 and v1) do not
+    val got = GeoTable.read(spark, root).where($"id".isin(0L, 45L, 105L))
       .select($"id").as[Long].collect().toSeq
     assert(got == Seq(105L), s"got $got")
     // CoW-rewrite every file: the delete applies to nothing afterwards -> GC'd

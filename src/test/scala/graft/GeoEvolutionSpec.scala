@@ -224,15 +224,13 @@ class GeoEvolutionSpec extends SparkSpec {
     assert(graft.tables.GeoManifest.read(spark, root).schema.fieldNames.toSeq == Seq("id"))
   }
 
-  test("manifest: end CRC guards v8+; unknown tag fails hard in legacy formats") {
+  test("manifest: one layout, mandatory end CRC; anything else fails loudly") {
     import graft.tables.{GeoManifest, GeoSchema, GeoTable}
     val root = java.nio.file.Files.createTempDirectory("geoevo_tag").toString + "/t"
     GeoTable.createEmpty(spark, root, GeoSchema.fromDdl("id BIGINT"), None)
     val mPath = java.nio.file.Paths.get(root, "_manifests", "m0.txt")
     val original = new String(java.nio.file.Files.readAllBytes(mPath))
-    // op provenance is an additive tag, so even a fresh empty table
-    // declares 8 and carries the end CRC trailer
-    assert(original.startsWith("graftgeo\t8\n"), original.take(40))
+    assert(original.startsWith("graftgeo\t10\n"), original.take(40))
     assert(original.linesIterator.exists(_.startsWith("end\t")), "no end trailer")
     // out-of-band edit: drop Hadoop's checksum sidecar or reads fail on CRC
     def editManifest(text: String): Unit = {
@@ -240,32 +238,43 @@ class GeoEvolutionSpec extends SparkSpec {
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(root, "_manifests", ".m0.txt.crc"))
     }
-    // a line whose tag got mangled in place: declared-8 readers skip
-    // unknown tags, so the end checksum is what fails the read loudly
-    // instead of silently dropping the line
+    def readFails(): String =
+      intercept[IllegalArgumentException] { GeoManifest.read(spark, root) }.getMessage
+    // every line before the trailer, and the same body re-sealed with a
+    // valid CRC so only the edit under test can fail the read
+    val body = original.substring(0, original.lastIndexOf("end\t"))
+    def withEnd(b: String): String = {
+      val crc = new java.util.zip.CRC32()
+      crc.update(b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      b + f"end\t${crc.getValue}%08x\n"
+    }
+    assert(withEnd(body) == original, "the trailer is the CRC32 of every byte before it")
+    // a line whose tag got mangled in place fails the end checksum
     editManifest(original.replace("op\tcreate", "o p\tcreate"))
-    val eCrc = intercept[IllegalArgumentException] { GeoManifest.read(spark, root) }
-    assert(eCrc.getMessage.contains("checksum"), eCrc.getMessage)
+    val eCrc = readFails()
+    assert(eCrc.contains("checksum") && eCrc.contains("m0.txt"), eCrc)
     // content appended after the trailer (a torn `file` line) fails too
     editManifest(original + "fil\t/x/part-0.parquet\t5\n")
-    val eTail = intercept[IllegalArgumentException] { GeoManifest.read(spark, root) }
-    assert(eTail.getMessage.contains("end trailer"), eTail.getMessage)
-    // trailer-less manifests are legacy: an unknown tag under a declared
-    // FUTURE format (8+) is additive and skips
-    val legacy = original.linesIterator.filterNot(_.startsWith("end\t"))
-      .mkString("\n") + "\n"
-    editManifest(legacy + "newtag\tpayload\n")
+    val eTail = readFails()
+    assert(eTail.contains("end trailer") && eTail.contains("m0.txt"), eTail)
+    // a manifest in an earlier layout — sealed (as format 8 and 9 were)
+    // or trailer-less (as format 3 was) — is refused, not misparsed
+    for (old <- Seq(withEnd(body.replace("graftgeo\t10", "graftgeo\t8")),
+                    body.replace("graftgeo\t10", "graftgeo\t3"))) {
+      editManifest(old)
+      val eOld = readFails()
+      assert(eOld.contains("m0.txt") && eOld.contains("rewrite the table"), eOld)
+    }
+    // a trailer-less manifest in the current layout is a torn write
+    editManifest(body)
+    val eNoEnd = readFails()
+    assert(eNoEnd.contains("no end trailer") && eNoEnd.contains("m0.txt"), eNoEnd)
+    // an unknown tag fails even under a valid checksum
+    editManifest(withEnd(body + "newtag\tpayload\n"))
+    val eTag = readFails()
+    assert(eTag.contains("bad manifest line in m0.txt") && eTag.contains("newtag"), eTag)
+    editManifest(original)
     assert(GeoManifest.read(spark, root).schema.fieldNames.toSeq == Seq("id"))
-    // ... but in a declared <=7 manifest the same unknown tag is corruption
-    editManifest(legacy.replace("graftgeo\t8", "graftgeo\t3") + "newtag\tpayload\n")
-    val e = intercept[IllegalArgumentException] { GeoManifest.read(spark, root) }
-    assert(e.getMessage.contains("bad manifest line"))
-    // a v2 manifest (no ts line) still reads, with commitTs empty
-    editManifest(legacy.replace("graftgeo\t8", "graftgeo\t2")
-      .linesIterator.filterNot(l => l.startsWith("ts\t") || l.startsWith("op\t"))
-      .mkString("\n") + "\n")
-    val v2m = GeoManifest.read(spark, root)
-    assert(v2m.commitTs.isEmpty && v2m.schema.fieldNames.toSeq == Seq("id"))
   }
 
   test("stripOuterParens strips only a balanced outer pair") {

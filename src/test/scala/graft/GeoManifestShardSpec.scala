@@ -7,7 +7,7 @@ import graft.functions.GraftFunctions._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Manifest format v5: sharded file lists (SURVEY.md §2.8b — the Iceberg
+/** Sharded manifest file lists (SURVEY.md §2.8b — the Iceberg
   * manifest-list/manifest split). Above `spark.graft.manifest.shardSize`
   * entries the manifest becomes a list referencing immutable shard
   * files, so a commit rewrites O(changed files) metadata, not the whole
@@ -55,13 +55,34 @@ class GeoManifestShardSpec extends SparkSpec {
     assert(GeoManifest.read(spark, root).files.length == 3)
   }
 
+  /** The list file `m<v>.txt` and every shard file start with the one
+    * layout header; the list file ends with an `end` line whose CRC32
+    * covers every byte before it. */
+  private def assertLayout(root: String, m: Manifest): Unit = {
+    def text(name: String) =
+      java.nio.file.Files.readString(java.nio.file.Path.of(root, "_manifests", name))
+    val list = text(s"m${m.version}.txt")
+    assert(list.startsWith("graftgeo\t10\n"), list.take(40))
+    val endAt = list.lastIndexOf("\nend\t")
+    assert(endAt > 0 && list.indexOf('\n', endAt + 1) == list.length - 1,
+      s"the list file must end with its end line: ${list.takeRight(40)}")
+    val crc = new java.util.zip.CRC32()
+    crc.update(list.substring(0, endAt + 1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(list.substring(endAt + 5).trim == f"${crc.getValue}%08x", "end CRC mismatch")
+    m.baseShards.foreach { sh =>
+      val t = text(sh.name)
+      assert(t.startsWith("graftshard\t10\n"), s"${sh.name}: ${t.take(40)}")
+    }
+  }
+
   test("fuzz: manifests round-trip arbitrary stats, saw-null flags, eq ranges") {
-    // deterministic fuzz over the full file-line + eqdelete-line grammar:
-    // every combination of bbox/NaN, 0..3 transform pairs, absent/present
-    // saw-null flags, addedAt, leading + tail key ranges — inline AND
-    // sharded layouts — must read back exactly (eq deletes modulo the
-    // writer's liveness GC, which the test recomputes with the public
-    // rule). This is the guard for the v8 token + parity disambiguation.
+    // deterministic fuzz over the whole manifest grammar: every
+    // combination of bbox/NaN, 0..3 transform pairs, absent/present
+    // saw-null flags, addedAt, spec ids and retired specs, leading + tail
+    // key ranges, op/props/checks/picked, bloom, colstat, delete, stream
+    // and dropped lines — inline AND sharded layouts — must read back
+    // exactly (eq deletes modulo the writer's liveness GC, which the test
+    // recomputes with the public rule)
     val rnd = new scala.util.Random(421L)
     for (it <- 0 until 40) {
       val nT = rnd.nextInt(4) // transforms
@@ -69,6 +90,10 @@ class GeoManifestShardSpec extends SparkSpec {
         graft.tables.GeoPartition.PTransform("stats", 0, s"c$i"))
       val sch = StructType(StructField("id", LongType) +:
         (0 until nT).map(i => StructField(s"c$i", LongType)))
+      // the current spec id and the retired specs, each a prefix of parts
+      val specId = rnd.nextInt(3)
+      val pastSpecs = (0 until 3).filter(_ != specId)
+        .filter(_ => rnd.nextBoolean()).map(id => id -> parts.take(rnd.nextInt(nT + 1))).toMap
       val nF = 1 + rnd.nextInt(30)
       val files = (0 until nF).map { i =>
         val hasP = nT > 0 && rnd.nextBoolean()
@@ -80,7 +105,8 @@ class GeoManifestShardSpec extends SparkSpec {
         val bbox = if (rnd.nextBoolean()) Seq(Double.NaN, Double.NaN, Double.NaN, Double.NaN)
                    else Seq(rnd.nextDouble(), rnd.nextDouble(), rnd.nextDouble() + 1, rnd.nextDouble() + 1)
         FileEntry(s"/data/part-$it-$i.parquet", 1 + rnd.nextInt(100),
-          bbox(0), bbox(1), bbox(2), bbox(3), ps, addedAt = rnd.nextInt(3), pnulls = pn)
+          bbox(0), bbox(1), bbox(2), bbox(3), ps, addedAt = rnd.nextInt(8), pnulls = pn,
+          spec = (specId +: pastSpecs.keys.toSeq)(rnd.nextInt(1 + pastSpecs.size)))
       }
       val nE = rnd.nextInt(3)
       val eqs = (0 until nE).map { j =>
@@ -97,27 +123,53 @@ class GeoManifestShardSpec extends SparkSpec {
               else None)
           else Seq.empty)
       }
+      val op = Seq("", "append", "delete", "rewrite_deletes")(rnd.nextInt(4))
+      val props = (0 until rnd.nextInt(3)).map(i =>
+        s"k$i" -> Seq("", "plain", "with\ttab")(rnd.nextInt(3))).toMap
+      val checks = (0 until rnd.nextInt(2)).map(i => s"chk$i" -> s"id > $i")
+      val picked = (0 until rnd.nextInt(3)).map(_ => rnd.nextInt(9)).toSet
+      val bloomCols = (0 until rnd.nextInt(3)).map(i =>
+        graft.tables.GeoBloom.BloomSpec(s"c$i", 0.01, 1000L + i))
+      val blooms = (0 until (if (bloomCols.isEmpty) 0 else rnd.nextInt(3))).map(j =>
+        graft.tables.GeoBloom.BloomEntry(s"/data/bl$it/part-$j.parquet",
+          bloomCols.map(_.col)))
+      val colStats = (0 until rnd.nextInt(3)).map(i => s"c$i" ->
+        GeoManifest.ColStat(rnd.nextInt(500), rnd.nextInt(5),
+          Some(-i.toLong).filter(_ => i % 2 == 0), Some(i.toLong).filter(_ => i % 2 == 0))).toMap
+      val deletes = (0 until rnd.nextInt(3)).map(j =>
+        GeoManifest.DeleteEntry(s"/data/d$it-$j.parquet", 1 + rnd.nextInt(10)))
+      val streams = (0 until rnd.nextInt(3)).map(j => s"sink$j" -> rnd.nextInt(50).toLong).toMap
+      val dropped = (0 until rnd.nextInt(2)).map(j => s"gone$j")
       val root = tmpRoot(s"fuzz$it")
-      val written = Manifest(0, sch, None, files, eqDeletes = eqs, partitions = parts)
+      val written = Manifest(0, sch, None, files, eqDeletes = eqs, partitions = parts,
+        specId = specId, pastSpecs = pastSpecs, props = props, checks = checks,
+        picked = picked, bloomCols = bloomCols, blooms = blooms, colStats = colStats,
+        deletes = deletes, streamCommits = streams, dropped = dropped)
       withShardSize(if (rnd.nextBoolean()) 8 else 100000) {
-        GeoManifest.write(spark, root, written)
+        GeoManifest.write(spark, root, written, op = op)
       }
       val back = GeoManifest.read(spark, root)
+      assertLayout(root, back)
       // the writer GC's eq deletes that can apply to no file — recompute
-      // the survivor set with the same public rule; addedAt persists
-      // ONLY while eq deletes are live (designed lossiness: without
-      // them, "oldest" is exact), so the oracle zeroes it in that case
-      val expectEq0 = eqs.filter(e => files.exists(f => GeoManifest.eqApplies(parts, e, f)))
-      val keepSeq = expectEq0.nonEmpty
+      // the survivor set with the same public rule, per file spec
+      val expectEq0 = eqs.filter(e => files.exists(f =>
+        GeoManifest.eqApplies(written.specSet.of(f), e, f)))
       // NaN != NaN under case-class equality — compare via string bboxes
       def norm(f: FileEntry) = (f.path, f.rows,
         Seq(f.xmin, f.ymin, f.xmax, f.ymax).map(_.toString),
-        f.pstats.toList, if (keepSeq) f.addedAt else 0, f.pnulls.toList)
+        f.pstats.toList, f.addedAt, f.pnulls.toList, f.spec)
       assert(back.files.sortBy(_.path).map(norm) == files.sortBy(_.path).map(norm),
         s"it=$it files mismatch:\n${back.files.sortBy(_.path)}\nvs\n${files.sortBy(_.path)}")
       assert(back.eqDeletes == expectEq0,
         s"it=$it eq mismatch:\n${back.eqDeletes}\nvs\n$expectEq0")
       assert(back.partitions == parts && back.schema == sch)
+      assert(back.specId == specId && back.pastSpecs == pastSpecs, s"it=$it specs")
+      assert(back.op == Some(op).filter(_.nonEmpty) && back.props == props &&
+        back.checks == checks && back.picked == picked, s"it=$it op/props/checks/picked")
+      assert(back.bloomCols == bloomCols && back.blooms == blooms, s"it=$it blooms")
+      assert(back.colStats == colStats && back.deletes == deletes &&
+        back.streamCommits == streams && back.dropped == dropped, s"it=$it other lines")
+      assert(back.parent == -1 && back.commitTs > 0, s"it=$it ts/parent")
     }
   }
 
@@ -130,14 +182,14 @@ class GeoManifestShardSpec extends SparkSpec {
       // the list file carries shard lines, no inline file lines
       val listText = java.nio.file.Files.readString(
         java.nio.file.Path.of(root, "_manifests", "m0.txt"))
-      assert(listText.startsWith("graftgeo\t5"), listText.take(40))
       assert(listText.contains("\nshard\t") && !listText.contains("\nfile\t"))
 
       val r0 = GeoManifest.read(spark, root)
+      assertLayout(root, r0)
       assert(r0.files.sortBy(_.path) == m0.files.sortBy(_.path))
       assert(r0.schema == schema && r0.baseShards.nonEmpty)
       // header-only ts fast path agrees with the full parse
-      assert(GeoManifest.commitTsOf(spark, root, 0) == r0.commitTs.get)
+      assert(GeoManifest.commitTsOf(spark, root, 0) == r0.commitTs)
 
       // append ONE file: full shards are referenced unchanged, only the
       // tail micro-shard (<= ss/4 entries, folded by design) is rewritten
@@ -149,6 +201,17 @@ class GeoManifestShardSpec extends SparkSpec {
         .intersect(r0.baseShards.map(_.name).toSet)
       assert(shared.size == 6, // 100 = 6 full shards of 16 + a tail of 4
         s"6 full shards must be reused by reference, shared=$shared")
+      assertLayout(root, r1)
+
+      // a shard in an earlier layout is refused by name, not misparsed
+      val old = r1.baseShards.head.name
+      val shardPath = java.nio.file.Path.of(root, "_manifests", old)
+      java.nio.file.Files.writeString(shardPath, java.nio.file.Files.readString(shardPath)
+        .replaceFirst("graftshard\t10\n", "graftshard\t4\n"))
+      java.nio.file.Files.deleteIfExists(java.nio.file.Path.of(root, "_manifests", s".$old.crc"))
+      val e = intercept[IllegalArgumentException](GeoManifest.read(spark, root))
+      assert(e.getMessage.contains(old) && e.getMessage.contains("rewrite the table"),
+        e.getMessage)
     }
   }
 

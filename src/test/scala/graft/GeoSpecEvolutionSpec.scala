@@ -98,7 +98,7 @@ class GeoSpecEvolutionSpec extends SparkSpec {
     assert(sql1("SELECT COUNT(*) FROM geose.db.evo WHERE a = 102") == 1000L)
   }
 
-  test("manifest format 9 round-trips specs through shards and survives re-reads") {
+  test("manifests round-trip evolved specs through shards and survive re-reads") {
     warehouse
     spark.conf.set("spark.graft.manifest.shardSize", "3")
     try {
@@ -113,7 +113,7 @@ class GeoSpecEvolutionSpec extends SparkSpec {
       val m = GeoManifest.read(spark, root)
       val text = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(root, "_manifests", s"m${m.version}.txt")))
-      assert(text.startsWith("graftgeo\t9\n"), "evolved tables declare format 9")
+      assert(text.startsWith("graftgeo\t10\n"), "evolved tables write the one layout")
       assert(text.contains("curspec\t1"), "current spec id persisted")
       assert(text.contains("spec\t0\t"), "retired spec persisted")
       val specs = m.files.map(_.spec).toSet

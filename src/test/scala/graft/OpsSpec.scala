@@ -1123,7 +1123,7 @@ class OpsSpec extends SparkSpec {
   test("index metadata cache keys on the whole path set, not its hash") {
     import graft.ops.Similarity
     assert(Seq("Aa").hashCode == Seq("BB").hashCode, "test premise: colliding hashes")
-    def key(paths: Seq[String]) = Similarity.metaKey("/idx/centroids", 3, Some(7L), "centroids", paths)
+    def key(paths: Seq[String]) = Similarity.metaKey("/idx/centroids", 3, 7L, "centroids", paths)
     assert(key(Seq("Aa")) != key(Seq("BB")), "colliding path lists must get distinct keys")
     assert(key(Seq("a", "b")) == key(Seq("b", "a")), "the key must not depend on listing order")
   }
