@@ -633,11 +633,13 @@ object SparkEntry {
     // The JoinQueryDetector-analog optimizer rule END-TO-END: a pure
     // spatial inner join written as plain SQL (which Spark alone would
     // execute as a BroadcastNestedLoopJoin) must be rewritten by
-    // SpatialJoinRewrite into the tile join — injected here through
-    // experimental.extraOptimizations so the driver's vanilla session
-    // exercises the same rule GraftExtensions installs; the in-query
-    // require proves it fired (no BNLJ/cartesian in the executed plan),
-    // and the oracle pins the rewritten join's results.
+    // SpatialJoinRewrite: into the broadcast index join, since the
+    // 25-row nation side is small (a large pair would be tiled). It is
+    // injected here through experimental.extraOptimizations so the
+    // driver's vanilla session exercises the same rule GraftExtensions
+    // installs; the in-query require proves it fired (no BNLJ/cartesian
+    // in the executed plan), and the oracle pins the rewritten join's
+    // results.
     "spatial_rewrite_join" -> ((s, d) => {
       prep(s, d)
       // Inject the rule + cellSize ONLY for this query's plan, restoring

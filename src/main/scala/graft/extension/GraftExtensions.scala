@@ -14,10 +14,11 @@ import org.apache.spark.sql.types.BinaryType
  * `spark.sql.extensions=graft.extension.GraftExtensions` entry point —
  * the analog of the reference's SedonaIcebergExtensions
  * (reference: extension/.../SedonaIcebergExtensions.scala:33): registers the
- * full ST_ catalog, the spatial optimizer rules, the GeoTable SQL DML
- * parser (UPDATE/DELETE/INSERT/CREATE ... USING GEO), and a GEOMETRY-typing
- * check that rejects ST_ functions applied to binary columns explicitly
- * tagged as non-geometry (GeoSchema.OpaqueTag).
+ * full ST_ catalog, the spatial optimizer rules, the index-join planner
+ * strategy, the GeoTable SQL DML parser (UPDATE/DELETE/INSERT/CREATE ...
+ * USING GEO), and a GEOMETRY-typing check that rejects ST_ functions
+ * applied to binary columns explicitly tagged as non-geometry
+ * (GeoSchema.OpaqueTag).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -26,6 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(graft.plans.GeoBboxPushdown.apply)
     ext.injectOptimizerRule(graft.plans.SpatialJoinRewrite.apply)
+    ext.injectPlannerStrategy(_ => graft.plans.SpatialIndexJoinStrategy)
     ext.injectParser((_, delegate) => new GeoSqlParser(delegate))
     // persisted-view name resolution (the Iceberg ResolveViews analog —
     // OSS Spark ships the ViewCatalog API but no analyzer wiring)

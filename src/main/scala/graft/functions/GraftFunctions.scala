@@ -609,14 +609,16 @@ object GraftFunctions {
   /** (name, usage) for every catalog function — docs/tooling surface. */
   def catalogDocs: Seq[(String, String)] = catalog.map { case (n, _) => n -> usageFor(n) }
 
-  /** Idempotent: (re)binds every catalog function + optimizer rule on the
-    * given session (post-hoc path; GraftExtensions does the same at build
-    * time via spark.sql.extensions). */
+  /** Idempotent: (re)binds every catalog function, optimizer rule and
+    * planner strategy on the given session (post-hoc path;
+    * GraftExtensions does the same at build time via
+    * spark.sql.extensions). */
   def register(spark: SparkSession): Unit = {
     catalog.foreach { case (name, b) => GraftShim.registerFunction(spark, name, b, usageFor(name)) }
     GraftShim.installOptimizerRules(spark, Seq(
       graft.plans.GeoBboxPushdown(spark),
       graft.plans.SpatialJoinRewrite(spark)))
+    GraftShim.installPlannerStrategies(spark, Seq(graft.plans.SpatialIndexJoinStrategy))
   }
 
   // -------------------------------------------------------------------------

@@ -4,6 +4,7 @@ import graft.functions._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, BuildSide}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -11,17 +12,27 @@ import org.apache.spark.sql.types.LongType
 
 /**
  * Optimizer rule (SURVEY.md §2.7): detects a Join whose only cross-side
- * condition is an ST_ predicate (which Spark would execute as BNLJ/cartesian)
- * and rewrites it into the tile join — explode both sides to grid cells,
- * equi-join on cell id, bbox prefilter + reference-point dedup + exact
- * refine. The analog of the reference's JoinQueryDetector planner strategy
- * (reference: extension/.../SedonaIcebergExtensions.scala:49), except the
- * output is ordinary Catalyst operators, so join selection, AQE and codegen
- * all still apply.
+ * condition is an ST predicate (which Spark would execute as BNLJ/cartesian)
+ * and plans it one of two ways — the analog of the reference's
+ * JoinQueryDetector planner strategy (reference:
+ * extension/.../SedonaIcebergExtensions.scala:49):
  *
+ *  - index join, when a side can be broadcast: a [[SpatialIndexJoin]] that
+ *    broadcasts that side and probes one STRtree over it per task. A side
+ *    can be broadcast when a BROADCAST hint names it or its estimated size
+ *    is within Spark's own `spark.sql.autoBroadcastJoinThreshold` (so -1
+ *    tiles every unhinted join). Hints win over size; between two
+ *    qualifying sides the smaller is indexed; a streaming side never is.
+ *  - tile join otherwise: explode both sides to grid cells, equi-join on
+ *    cell id, bbox prefilter + reference-point dedup + exact refine. The
+ *    output is ordinary Catalyst operators, so join selection, AQE and
+ *    codegen all still apply. Cell size: `spark.graft.join.cellSize`
+ *    (default 1.0; the tile join is its only reader).
+ *
+ * Both paths evaluate the original condition on every emitted pair.
  * Guard: joins that already expose an equi key are left alone (also makes
- * the rule idempotent — the rewritten join has a cell equality).
- * Cell size: `spark.graft.join.cellSize` (default 1.0).
+ * the rule idempotent — the tiled join has a cell equality, and the index
+ * join is no longer a Join).
  */
 case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -30,10 +41,32 @@ case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val conjs = splitConj(cond)
       findSpatialPred(conjs, left, right) match {
         case Some((pred, lgeom, rgeom, dist)) =>
-          val cs = spark.conf.getOption("spark.graft.join.cellSize").map(_.toDouble).getOrElse(1.0)
-          rewrite(left, right, cond, pred, lgeom, rgeom, dist, cs, hint)
+          indexSide(left, right, hint) match {
+            case Some(side) => SpatialIndexJoin(left, right, cond, side, lgeom, rgeom, dist)
+            case None =>
+              val cs = spark.conf.getOption("spark.graft.join.cellSize").map(_.toDouble).getOrElse(1.0)
+              rewrite(left, right, cond, pred, lgeom, rgeom, dist, cs, hint)
+          }
         case None => j
       }
+  }
+
+  /** The side to index, or None to tile: the one index-versus-tile
+    * decision (see the class doc). */
+  private def indexSide(left: LogicalPlan, right: LogicalPlan, hint: JoinHint): Option[BuildSide] = {
+    def hinted(h: Option[HintInfo]) = h.exists(_.strategy.contains(BROADCAST))
+    def small(p: LogicalPlan) =
+      conf.autoBroadcastJoinThreshold >= 0 && p.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold
+    val byHint = hinted(hint.leftHint) || hinted(hint.rightHint)
+    def can(p: LogicalPlan, h: Option[HintInfo]) =
+      !p.isStreaming && (if (byHint) hinted(h) else small(p))
+    (can(left, hint.leftHint), can(right, hint.rightHint)) match {
+      case (true, true) =>
+        Some(if (right.stats.sizeInBytes <= left.stats.sizeInBytes) BuildRight else BuildLeft)
+      case (true, false) => Some(BuildLeft)
+      case (false, true) => Some(BuildRight)
+      case _ => None
+    }
   }
 
   private def splitConj(e: Expression): Seq[Expression] = e match {

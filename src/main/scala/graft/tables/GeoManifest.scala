@@ -718,13 +718,15 @@ object GeoManifest {
   }
 
   /** Read shard files, in parallel — a 1M-file table is ~40 shard
-    * reads, and on remote filesystems the per-file round-trip dominates. */
+    * reads, and on remote filesystems the per-file round-trip dominates.
+    * Each shard must hold the entry count its `shard` line records, so a
+    * shard cut at a line boundary fails instead of reading short. */
   private def readShards(f: FileSystem, root: String, v: Int,
-                         names: Seq[String]): Seq[ShardRef] = {
+                         names: Seq[(String, Int)]): Seq[ShardRef] = {
     if (names.isEmpty) return Seq.empty
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, names.length))
     try {
-      val futs = names.map { n =>
+      val futs = names.map { case (n, count) =>
         pool.submit(new java.util.concurrent.Callable[ShardRef] {
           override def call(): ShardRef = {
             val file = s"$n (shard of m$v.txt)"
@@ -735,6 +737,9 @@ object GeoManifest {
               if (parts(0) != "file") throw badLine(file, root, line)
               parseFileEntry(parts, file, root)
             }
+            require(entries.length == count,
+              s"$file at $root holds ${entries.length} entries but m$v.txt records " +
+                s"$count (truncated or tampered shard)")
             ShardRef(n, entries)
           }
         })
@@ -755,7 +760,7 @@ object GeoManifest {
     var schema: StructType = null
     var geomCol: Option[String] = None
     val files = Seq.newBuilder[FileEntry]
-    val shardNames = Seq.newBuilder[String]
+    val shardNames = Seq.newBuilder[(String, Int)]
     val deletes = Seq.newBuilder[DeleteEntry]
     val eqDeletes = Seq.newBuilder[EqDeleteEntry]
     val partitions = Seq.newBuilder[GeoPartition.PTransform]
@@ -786,7 +791,7 @@ object GeoManifest {
         case "dropped" => dropped += parts(1)
         case "stream" => streams += parts(1) -> parts(2).toLong
         case "file" => files += parseFileEntry(parts, file, root)
-        case "shard" => shardNames += parts(1)
+        case "shard" => shardNames += parts(1) -> parts(2).toInt
         case "delete" => deletes += DeleteEntry(parts(1), parts(2).toLong)
         case "eqdelete" =>
           val kranges =

@@ -45,6 +45,16 @@ object GraftShim {
     exp.extraOptimizations = keep ++ rules
   }
 
+  /** Install planner strategies on a live session (post-hoc analog of
+    * SparkSessionExtensions.injectPlannerStrategy; idempotent). */
+  def installPlannerStrategies(
+      spark: SparkSession,
+      strategies: Seq[org.apache.spark.sql.execution.SparkStrategy]): Unit = {
+    val exp = spark.asInstanceOf[ClassicSparkSession].experimental
+    val keep = exp.extraStrategies.filterNot(s => strategies.exists(_.getClass == s.getClass))
+    exp.extraStrategies = keep ++ strategies
+  }
+
   /** True when no Dataset-level cache is pinned in the CacheManager —
     * the cache-hygiene assertion ops specs run after each operator. */
   def pinnedCacheEmpty(spark: SparkSession): Boolean =

@@ -203,9 +203,19 @@ class GeoManifestShardSpec extends SparkSpec {
         s"6 full shards must be reused by reference, shared=$shared")
       assertLayout(root, r1)
 
-      // a shard in an earlier layout is refused by name, not misparsed
+      // a shard cut at a line boundary fails by name, not as a shorter list
       val old = r1.baseShards.head.name
       val shardPath = java.nio.file.Path.of(root, "_manifests", old)
+      val whole = java.nio.file.Files.readString(shardPath)
+      java.nio.file.Files.writeString(shardPath,
+        whole.stripSuffix("\n").split('\n').dropRight(1).mkString("", "\n", "\n"))
+      java.nio.file.Files.deleteIfExists(java.nio.file.Path.of(root, "_manifests", s".$old.crc"))
+      val cut = intercept[IllegalArgumentException](GeoManifest.read(spark, root))
+      assert(cut.getMessage.contains(old) && cut.getMessage.contains("entries"), cut.getMessage)
+      java.nio.file.Files.writeString(shardPath, whole)
+      assert(GeoManifest.read(spark, root).files.length == 101)
+
+      // a shard in an earlier layout is refused by name, not misparsed
       java.nio.file.Files.writeString(shardPath, java.nio.file.Files.readString(shardPath)
         .replaceFirst("graftshard\t10\n", "graftshard\t4\n"))
       java.nio.file.Files.deleteIfExists(java.nio.file.Path.of(root, "_manifests", s".$old.crc"))

@@ -89,7 +89,7 @@ class PlanRulesSpec extends SparkSpec {
     }
   }
 
-  test("SpatialJoinRewrite: SQL join on ST predicate becomes equi-join (no BNLJ) with same results") {
+  test("SpatialJoinRewrite: SQL ST join avoids BNLJ and equals naive pairs") {
     spark.conf.set("spark.graft.join.cellSize", "20.0")
     spark.range(300).select(col("id").as("pid"),
       st_point(pmod(hash(col("id")), lit(1000)).cast("double") / 10.0,
